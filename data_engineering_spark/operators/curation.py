@@ -29,6 +29,7 @@ from data_engineering_spark.operators.filters import (
     gopher_metrics,
 )
 from data_engineering_spark.operators.graph import connected_components
+from data_engineering_spark.operators.materialize import CacheScope
 from data_engineering_spark.operators.text import ngram_jaccard_pairs
 
 
@@ -70,7 +71,6 @@ def curate_corpus(
     The two agree whenever banding recall holds (~1-1e-6 per pair at
     32x2 bands), which the shared oracle checks end-to-end.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     # persist, NOT a checkpoint mark: `exact` feeds the quality gate's
@@ -82,116 +82,113 @@ def curate_corpus(
     # runs in a LATER action where exchange reuse cannot reach — the
     # cache serves it the materialized rows instead of re-running the
     # corpus hash shuffle. Same caller-owned persist contract as
-    # `quality` below.
-    from pyspark import StorageLevel
+    # `quality` below. A failure anywhere in the funnel releases both.
+    with CacheScope() as scope:
+        exact = scope.persist(
+            dedup_exact(docs, [text_col], id_col).drop("n_copies")
+        )
 
-    exact = (
-        dedup_exact(docs, [text_col], id_col)
-        .drop("n_copies")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        if quality_gate == "gopher":
+            gm = gopher_metrics(exact, id_col=id_col, text_col=text_col)
+            keep_ids = gm.filter(F.col("keep")).select(id_col)
+        elif quality_gate == "classifier":
+            # trained-model gate instead of the heuristic band — the
+            # md5-portable scorer, so the funnel stays oracle-checkable
+            # end to end (operators/classifier.py)
+            if classifier_weights is None:
+                raise ValueError(
+                    "quality='classifier' needs classifier_weights"
+                )
+            from data_engineering_spark.operators.classifier import (
+                linear_classifier_score,
+            )
 
-    if quality_gate == "gopher":
-        gm = gopher_metrics(exact, id_col=id_col, text_col=text_col)
-        keep_ids = gm.filter(F.col("keep")).select(id_col)
-    elif quality_gate == "classifier":
-        # trained-model gate instead of the heuristic band — the
-        # md5-portable scorer, so the funnel stays oracle-checkable
-        # end to end (operators/classifier.py)
-        if classifier_weights is None:
+            scored = linear_classifier_score(
+                exact,
+                classifier_weights,
+                id_col=id_col,
+                text_col=text_col,
+                num_buckets=classifier_buckets,
+                bias=classifier_bias,
+            )
+            keep_ids = scored.filter(F.col("label")).select(id_col)
+        else:
             raise ValueError(
-                "quality='classifier' needs classifier_weights"
+                "quality_gate must be 'gopher' or 'classifier': "
+                f"{quality_gate}"
             )
-        from data_engineering_spark.operators.classifier import (
-            linear_classifier_score,
-        )
+        quality = exact.join(keep_ids, id_col, "left_semi")
+        # the near-dup stage consumes `quality` three ways (pairs, member
+        # join, length score); persist the survivor set once
+        quality = scope.persist(quality)
 
-        scored = linear_classifier_score(
-            exact,
-            classifier_weights,
-            id_col=id_col,
-            text_col=text_col,
-            num_buckets=classifier_buckets,
-            bias=classifier_bias,
+        score = (
+            F.col(score_col) if score_col else F.length(text_col)
         )
-        keep_ids = scored.filter(F.col("label")).select(id_col)
-    else:
-        raise ValueError(
-            "quality_gate must be 'gopher' or 'classifier': "
-            f"{quality_gate}"
-        )
-    quality = exact.join(keep_ids, id_col, "left_semi")
-    # the near-dup stage consumes `quality` three ways (pairs, member
-    # join, length score); persist the survivor set once
-    quality = quality.persist(StorageLevel.MEMORY_AND_DISK)
+        if near_dup == "star":
+            from data_engineering_spark.operators.minhash import (
+                minhash_star_clusters,
+            )
 
-    score = (
-        F.col(score_col) if score_col else F.length(text_col)
-    )
-    if near_dup == "star":
-        from data_engineering_spark.operators.minhash import (
-            minhash_star_clusters,
-        )
-
-        clusters = minhash_star_clusters(
-            quality.select(F.col(id_col), F.col(text_col)),
-            id_col=id_col,
-            text_col=text_col,
-            threshold=jaccard_threshold,
-        )
-        member = quality.withColumn("__len", score).join(
-            clusters.withColumnRenamed("cluster_id", "__cluster"),
-            id_col,
-        )
-    elif near_dup == "ppjoin":
-        pairs = ngram_jaccard_pairs(
-            quality.select(F.col(id_col), F.col(text_col)),
-            id_col=id_col,
-            text_col=text_col,
-            threshold=jaccard_threshold,
-        )
-        # ngram_jaccard_pairs emits distinct canonical (a < b) pairs
-        # (cands .distinct() + one verify row per candidate) — skip
-        # CC's union+distinct shuffle
-        comp = connected_components(
-            pairs, "doc_a", "doc_b", edges_unique=True
-        )
-        member = (
-            quality.withColumn("__len", score)
-            .join(
-                comp.select(
-                    F.col("vertex").alias(id_col),
-                    F.col("component").alias("__c"),
-                ),
+            clusters = minhash_star_clusters(
+                quality.select(F.col(id_col), F.col(text_col)),
+                id_col=id_col,
+                text_col=text_col,
+                threshold=jaccard_threshold,
+            )
+            member = quality.withColumn("__len", score).join(
+                clusters.withColumnRenamed("cluster_id", "__cluster"),
                 id_col,
-                "left",
             )
-            .withColumn("__cluster", F.coalesce("__c", F.col(id_col)))
-            .drop("__c")
+        elif near_dup == "ppjoin":
+            pairs = ngram_jaccard_pairs(
+                quality.select(F.col(id_col), F.col(text_col)),
+                id_col=id_col,
+                text_col=text_col,
+                threshold=jaccard_threshold,
+            )
+            # ngram_jaccard_pairs emits distinct canonical (a < b) pairs
+            # (cands .distinct() + one verify row per candidate) — skip
+            # CC's union+distinct shuffle
+            comp = connected_components(
+                pairs, "doc_a", "doc_b", edges_unique=True
+            )
+            member = (
+                quality.withColumn("__len", score)
+                .join(
+                    comp.select(
+                        F.col("vertex").alias(id_col),
+                        F.col("component").alias("__c"),
+                    ),
+                    id_col,
+                    "left",
+                )
+                .withColumn("__cluster", F.coalesce("__c", F.col(id_col)))
+                .drop("__c")
+            )
+        else:
+            raise ValueError(f"near_dup must be 'ppjoin' or 'star': {near_dup}")
+        w = Window.partitionBy("__cluster").orderBy(
+            F.desc("__len"), F.asc(id_col)
         )
-    else:
-        raise ValueError(f"near_dup must be 'ppjoin' or 'star': {near_dup}")
-    w = Window.partitionBy("__cluster").orderBy(
-        F.desc("__len"), F.asc(id_col)
-    )
-    canonical = (
-        member.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__cluster")
-    )
+        canonical = (
+            member.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn", "__cluster")
+        )
 
-    capped = cap_per_group(
-        canonical, list(cap_cols), "__len", cap_n, tiebreaker=id_col
-    ).drop("__len")
+        capped = cap_per_group(
+            canonical, list(cap_cols), "__len", cap_n, tiebreaker=id_col
+        ).drop("__len")
 
-    stages = [
-        ("raw", docs),
-        ("exact_dedup", exact),
-        ("quality", quality),
-        ("near_dedup", canonical.drop("__len")),
-        ("domain_cap", capped),
-    ]
-    return capped, stages
+        stages = [
+            ("raw", docs),
+            ("exact_dedup", exact),
+            ("quality", quality),
+            ("near_dedup", canonical.drop("__len")),
+            ("domain_cap", capped),
+        ]
+        return capped, stages
 
 
 def funnel_counts(stages: list[tuple[str, DataFrame]]) -> DataFrame:

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_spark.operators.materialize import CacheScope
 from data_engineering_spark.operators.text import tokens
 
 
@@ -170,75 +171,66 @@ def dsir_log_weights(
     scan dominates that materialization (large corpora / large
     targets); at small scale the extra tokenize is cheaper (A/B at
     sf0.1: 2.4 s two-scan vs 3.8 s subset)."""
-    from pyspark import StorageLevel
-
     # raw_counts feeds at least two consumers (the raw distribution
     # and the scoring join; three with target_subset) and each
     # recomputation re-pays the corpus tokenize+hash scan — persist the
     # fixed-width (doc, bucket, c) frame, same rationale as the LSH
     # band-rows persist in operators/minhash.py
-    raw_counts = hashed_ngram_buckets(
-        docs, id_col, text_col, num_buckets
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if target_subset:
-        tgt_counts = raw_counts.join(
-            target.select(F.col(id_col).alias("doc")).distinct(),
-            "doc",
-            "left_semi",
+    with CacheScope(release_cache) as scope:
+        raw_counts = scope.persist(
+            hashed_ngram_buckets(docs, id_col, text_col, num_buckets)
         )
-    else:
-        tgt_counts = hashed_ngram_buckets(
-            target, id_col, text_col, num_buckets
-        )
-    p_raw = bucket_distribution(raw_counts, num_buckets)
-    p_tgt = bucket_distribution(tgt_counts, num_buckets)
-    # one weight row per OBSERVED bucket of either model; missing side
-    # falls back to its smoothing floor. The floors are constants per
-    # model — carried on every row so the join below needs no second
-    # lookup.
-    weights = (
-        p_tgt.select(
-            "bucket",
-            F.col("logp").alias("lt"),
-            F.col("log_floor").alias("ft"),
-        )
-        .join(
-            p_raw.select(
+        if target_subset:
+            tgt_counts = raw_counts.join(
+                target.select(F.col(id_col).alias("doc")).distinct(),
+                "doc",
+                "left_semi",
+            )
+        else:
+            tgt_counts = hashed_ngram_buckets(
+                target, id_col, text_col, num_buckets
+            )
+        p_raw = bucket_distribution(raw_counts, num_buckets)
+        p_tgt = bucket_distribution(tgt_counts, num_buckets)
+        # one weight row per OBSERVED bucket of either model; missing side
+        # falls back to its smoothing floor. The floors are constants per
+        # model — carried on every row so the join below needs no second
+        # lookup.
+        weights = (
+            p_tgt.select(
                 "bucket",
-                F.col("logp").alias("lr"),
-                F.col("log_floor").alias("fr"),
-            ),
-            "bucket",
-            "full_outer",
+                F.col("logp").alias("lt"),
+                F.col("log_floor").alias("ft"),
+            )
+            .join(
+                p_raw.select(
+                    "bucket",
+                    F.col("logp").alias("lr"),
+                    F.col("log_floor").alias("fr"),
+                ),
+                "bucket",
+                "full_outer",
+            )
         )
-    )
-    # fill per-side floors: max() over the constant column is the
-    # constant itself (the floor never varies within a model)
-    floors = weights.agg(
-        F.max("ft").alias("ft"), F.max("fr").alias("fr")
-    )
-    weights = weights.crossJoin(F.broadcast(floors.select(
-        F.col("ft").alias("__ft"), F.col("fr").alias("__fr")
-    ))).select(
-        "bucket",
-        (F.coalesce(F.col("lt"), F.col("__ft"))
-         - F.coalesce(F.col("lr"), F.col("__fr"))).alias("dlog"),
-    )
-    result = (
-        raw_counts.join(F.broadcast(weights), "bucket")
-        .groupBy("doc")
-        .agg(F.sum(F.col("c") * F.col("dlog")).alias("log_w"))
-        .select(F.col("doc").alias(id_col), "log_w")
-    )
-    if not release_cache:
-        return result
-    from data_engineering_spark.operators.materialize import (
-        eager_checkpoint,
-    )
-
-    out = eager_checkpoint(result)
-    raw_counts.unpersist()
-    return out
+        # fill per-side floors: max() over the constant column is the
+        # constant itself (the floor never varies within a model)
+        floors = weights.agg(
+            F.max("ft").alias("ft"), F.max("fr").alias("fr")
+        )
+        weights = weights.crossJoin(F.broadcast(floors.select(
+            F.col("ft").alias("__ft"), F.col("fr").alias("__fr")
+        ))).select(
+            "bucket",
+            (F.coalesce(F.col("lt"), F.col("__ft"))
+             - F.coalesce(F.col("lr"), F.col("__fr"))).alias("dlog"),
+        )
+        result = (
+            raw_counts.join(F.broadcast(weights), "bucket")
+            .groupBy("doc")
+            .agg(F.sum(F.col("c") * F.col("dlog")).alias("log_w"))
+            .select(F.col("doc").alias(id_col), "log_w")
+        )
+        return scope.result(result)
 
 
 def dsir_select(

@@ -20,8 +20,14 @@ the corpus is touched only by the final label join.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from data_engineering_spark.operators.materialize import (
+    CacheScope,
+    eager_checkpoint,
+)
 
 
 def connected_components(
@@ -67,81 +73,54 @@ def connected_components(
     # RDD path re-executes an expensive edge pipeline un-optimized
     # (measured 143.7 s vs 62 s total at 16x scale — see
     # operators/materialize.py).
-    e1 = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).persist()
-    e1.count()
-    # base/labels checkpoints are LAZY (eager=False): each one still
-    # truncates lineage to an RDD scan immediately, but materialization
-    # happens inside round 0's convergence-count job instead of paying
-    # one serialized driver action per frame — 3 fewer scheduler
-    # round-trips per CC call (guide §5: the driver should do almost no
-    # work; serialized metadata-sized jobs are pure driver latency).
-    # base computes from e1's CACHE (the count above populated it), so
-    # the RDD-path penalty documented in operators/materialize.py does
-    # not apply; e1 stays persisted until round 0 materializes base
-    # (released inside _cc_rounds).
-    if edges_unique:
-        # one-direction blocks only; the mirror is a narrow map over
-        # the checkpoint, re-derived per consumer for free — no
-        # distinct exchange, half the checkpointed bytes
-        base = e1.localCheckpoint(eager=False)
-        e = base.union(
-            base.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    with CacheScope() as scope:
+        e1 = scope.persist(
+            edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")),
+            StorageLevel.MEMORY_AND_DISK_DESER,
         )
-    else:
-        base = e = (
-            e1.union(
-                e1.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        e1.count()
+        # base/labels checkpoints are LAZY: each one still truncates
+        # lineage to an RDD scan immediately, but materialization
+        # happens inside round 0's convergence-count job instead of
+        # paying one serialized driver action per frame — 3 fewer
+        # scheduler round-trips per CC call (guide §5: the driver should
+        # do almost no work; serialized metadata-sized jobs are pure
+        # driver latency). base computes from e1's CACHE (the count
+        # above populated it), so the RDD-path penalty documented in
+        # operators/materialize.py does not apply; e1 stays persisted
+        # until round 0 materializes base.
+        if edges_unique:
+            # one-direction blocks only; the mirror is a narrow map over
+            # the checkpoint, re-derived per consumer for free — no
+            # distinct exchange, half the checkpointed bytes
+            base = scope.checkpoint(e1)
+            e = base.union(
+                base.select(F.col("v").alias("u"), F.col("u").alias("v"))
             )
-            .distinct()
-            .localCheckpoint(eager=False)
+        else:
+            base = e = scope.checkpoint(
+                e1.union(
+                    e1.select(F.col("v").alias("u"), F.col("u").alias("v"))
+                ).distinct()
+            )
+        # seed with min(self, min(neighbor)) — the first propagation
+        # round comes free inside the init aggregate (one round fewer in
+        # the loop)
+        labels = scope.checkpoint(
+            e.groupBy("u")
+            .agg(F.least(F.col("u"), F.min("v")).alias("component"))
+            .select(F.col("u").alias("vertex"), "component")
         )
-    # seed with min(self, min(neighbor)) — the first propagation round
-    # comes free inside the init aggregate (one round fewer in the loop)
-    labels = (
-        e.groupBy("u")
-        .agg(F.least(F.col("u"), F.min("v")).alias("component"))
-        .select(F.col("u").alias("vertex"), "component")
-        .localCheckpoint(eager=False)
-    )
 
-    # checkpoint hygiene: localCheckpoint blocks are NOT catalog-tracked
-    # (clearCache can't free them) and a loop that leaves one per round
-    # accumulates block-manager pressure across calls — measured as
-    # multi-second degradation on repeated runs in one session. Track
-    # superseded checkpoints and drop their blocks as soon as the next
-    # round is materialized; only the returned labels frame stays alive.
-    prev_ckpt: DataFrame | None = labels
-
-    def _release(df: DataFrame | None) -> None:
-        if df is not None:
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass
-
-    return _cc_loop(e, base, e1, labels, prev_ckpt, max_iter, _release)
-
-
-def _cc_loop(e, base, e1, labels, prev_ckpt, max_iter, _release):
-    try:
-        return _cc_rounds(
-            e, base, e1, labels, prev_ckpt, max_iter, _release
-        )
-    except BaseException:
-        # the hygiene contract must hold on the failure path too: a
-        # non-convergence raise (or any mid-loop error) would otherwise
-        # strand the edge checkpoint/cache blocks, which clearCache
-        # cannot free (the round checkpoints release inside _cc_rounds)
-        _release(base)
-        _release(e1)
-        raise
-
-
-def _cc_rounds(e, base, e1, labels, prev_ckpt, max_iter, _release):
-    jumped = None
-    try:
+        # checkpoint hygiene: localCheckpoint blocks are NOT
+        # catalog-tracked (clearCache can't free them) and a loop that
+        # leaves one per round accumulates block-manager pressure across
+        # calls — measured as multi-second degradation on repeated runs
+        # in one session. Superseded checkpoints are released as soon as
+        # the next round is materialized; only the returned labels frame
+        # stays alive. Any raise (non-convergence included) releases
+        # every frame still registered with the scope.
+        prev_ckpt = labels
         for rnd in range(max_iter):
             # step 1 — edge propagation: for each vertex, min label
             # among its neighbors, then min(own, incoming)
@@ -169,16 +148,20 @@ def _cc_rounds(e, base, e1, labels, prev_ckpt, max_iter, _release):
             # depth every round, giving the textbook O(log n) convergence
             # that 100 TB pair graphs need.
             a, b = prop.alias("a"), prop.alias("b")
-            jumped = a.join(
-                b, F.col("a.component") == F.col("b.vertex"), "left"
-            ).select(
-                F.col("a.vertex").alias("vertex"),
-                F.col("a.__old").alias("__old"),
-                F.least(
-                    F.col("a.component"),
-                    F.coalesce(F.col("b.component"), F.col("a.component")),
-                ).alias("component"),
-            ).localCheckpoint(eager=False)
+            jumped = scope.checkpoint(
+                a.join(
+                    b, F.col("a.component") == F.col("b.vertex"), "left"
+                ).select(
+                    F.col("a.vertex").alias("vertex"),
+                    F.col("a.__old").alias("__old"),
+                    F.least(
+                        F.col("a.component"),
+                        F.coalesce(
+                            F.col("b.component"), F.col("a.component")
+                        ),
+                    ).alias("component"),
+                )
+            )
             # fused convergence probe: the count is the round's ONE
             # action — it computes the round's joins, materializes the
             # lazy checkpoint blocks (jumped, and on round 0 base + the
@@ -192,29 +175,18 @@ def _cc_rounds(e, base, e1, labels, prev_ckpt, max_iter, _release):
             if rnd == 0:
                 # base is materialized now — the edge-pipeline cache has
                 # no further consumer
-                _release(e1)
+                scope.release(e1)
             # the previous round's checkpoint (and, first round, the init
             # labels) are superseded now that `jumped` is materialized
-            _release(prev_ckpt)
+            scope.release(prev_ckpt)
             prev_ckpt = jumped
             labels = jumped.select("vertex", "component")
             if changed == 0:
-                _release(base)
+                scope.release(base)
                 return labels
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
-    except BaseException:
-        # hygiene on every raise path (ADVICE r11): release the last
-        # superseded checkpoint AND the in-flight round frame — their
-        # persist-marked RDDs hold blocks clearCache cannot free
-        # (unpersist on an already-released frame is a no-op, so the
-        # non-convergence path above double-releasing prev_ckpt here is
-        # harmless). base + e1 release in _cc_loop's handler.
-        _release(prev_ckpt)
-        if jumped is not None and jumped is not prev_ckpt:
-            _release(jumped)
-        raise
 
 
 def dedup_clusters(
@@ -351,121 +323,115 @@ def pagerank(
     caps at ~9e6 full-magnitude terms per vertex, far above any real
     in-degree mass (contributions sum to <= 1 per vertex).
     """
-    from data_engineering_spark.operators.materialize import (
-        eager_checkpoint,
-    )
-
     wcol = (
         F.col(weight_col).cast("double")
         if weight_col
         else F.lit(1.0)
     )
-    # checkpoint the edge projection ONCE through the optimized action
-    # path (materialize.py); verts/out then derive from the cheap
-    # checkpointed frame instead of re-running the caller's edge
-    # pipeline twice on the slow RDD path
-    ed = eager_checkpoint(
-        edges.select(
-            F.col(src_col).alias("src"),
-            F.col(dst_col).alias("dst"),
-            wcol.alias("w"),
-        )
-    )
-    # lazy mark + count: the count job materializes the checkpoint
-    # through the optimized path AND returns n — one action, not two
-    # (the §10 eager_checkpoint fusion)
-    verts = (
-        ed.select(F.col("src").alias("vertex"))
-        .union(ed.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = verts.count()
-    out = (
-        ed
-        .withColumn(
-            "w_tot",
-            F.sum(F.col("w").cast("decimal(18,6)")).over(
-                Window.partitionBy("src")
-            ),
-        )
-        .withColumn(
-            "frac", F.col("w") / F.col("w_tot").cast("double")
-        )
-        .select("src", "dst", "frac")
-        .localCheckpoint(eager=True)
-    )
-    ed.unpersist(blocking=False)
-    # init ranks: a narrow constant projection over the verts
-    # checkpoint — nothing to truncate, no checkpoint needed
-    ranks = verts.select(
-        "vertex", (F.lit(1.0) / F.lit(float(n))).alias("rank")
-    )
-    # superseded round frames, released ONLY after the final count
-    # materializes the chain (see docstring)
-    pending: list[DataFrame] = []
-    for _ in range(n_iter):
-        contrib = (
-            out.join(ranks, out["src"] == ranks["vertex"])
-            .select(
-                F.col("dst").alias("vertex"),
-                # per-row double product (identical IEEE everywhere),
-                # then portable fixed-point quantization + exact long
-                # accumulation — order-independent AND engine-exact
-                F.floor(
-                    F.col("rank") * F.col("frac") * F.lit(1e12)
-                    + F.lit(0.5)
+    with CacheScope() as scope:
+        # checkpoint the edge projection ONCE through the optimized action
+        # path (materialize.py); verts/out then derive from the cheap
+        # checkpointed frame instead of re-running the caller's edge
+        # pipeline twice on the slow RDD path
+        ed = scope.own(
+            eager_checkpoint(
+                edges.select(
+                    F.col(src_col).alias("src"),
+                    F.col(dst_col).alias("dst"),
+                    wcol.alias("w"),
                 )
-                .cast("long")
-                .alias("ci"),
             )
-            .groupBy("vertex")
-            .agg(F.sum("ci").alias("ci"))
+        )
+        # lazy mark + count: the count job materializes the checkpoint
+        # through the optimized path AND returns n — one action, not two
+        # (the §10 eager_checkpoint fusion)
+        verts = scope.checkpoint(
+            ed.select(F.col("src").alias("vertex"))
+            .union(ed.select(F.col("dst").alias("vertex")))
+            .distinct()
+        )
+        n = verts.count()
+        out = scope.own(
+            ed
             .withColumn(
-                "c", F.col("ci").cast("double") / F.lit(1e12)
+                "w_tot",
+                F.sum(F.col("w").cast("decimal(18,6)")).over(
+                    Window.partitionBy("src")
+                ),
             )
+            .withColumn(
+                "frac", F.col("w") / F.col("w_tot").cast("double")
+            )
+            .select("src", "dst", "frac")
+            .localCheckpoint(eager=True)
         )
-        # dangling + teleport mass: (1 - damping*flowed)/n, carried as
-        # a broadcast one-row frame so the whole round is ONE job
-        residual = contrib.agg(
-            (
-                (
-                    F.lit(1.0)
-                    - F.lit(damping)
-                    * F.coalesce(
-                        F.sum("ci").cast("double") / F.lit(1e12),
-                        F.lit(0.0),
+        scope.release(ed)
+        # init ranks: a narrow constant projection over the verts
+        # checkpoint — nothing to truncate, no checkpoint needed
+        ranks = verts.select(
+            "vertex", (F.lit(1.0) / F.lit(float(n))).alias("rank")
+        )
+        # superseded round frames, released ONLY after the final count
+        # materializes the chain (see docstring)
+        pending: list[DataFrame] = []
+        for _ in range(n_iter):
+            contrib = (
+                out.join(ranks, out["src"] == ranks["vertex"])
+                .select(
+                    F.col("dst").alias("vertex"),
+                    # per-row double product (identical IEEE everywhere),
+                    # then portable fixed-point quantization + exact long
+                    # accumulation — order-independent AND engine-exact
+                    F.floor(
+                        F.col("rank") * F.col("frac") * F.lit(1e12)
+                        + F.lit(0.5)
                     )
+                    .cast("long")
+                    .alias("ci"),
                 )
-                / F.lit(float(n))
-            ).alias("__res")
-        )
-        ranks = (
-            verts.join(contrib.select("vertex", "c"), "vertex", "left")
-            .crossJoin(F.broadcast(residual))
-            .select(
-                "vertex",
-                (
-                    F.lit(damping) * F.coalesce("c", F.lit(0.0))
-                    + F.col("__res")
-                ).alias("rank"),
+                .groupBy("vertex")
+                .agg(F.sum("ci").alias("ci"))
+                .withColumn(
+                    "c", F.col("ci").cast("double") / F.lit(1e12)
+                )
             )
-            .localCheckpoint(eager=False)
-        )
-        pending.append(ranks)
-    # ONE action materializes all n_iter lazily-chained rounds (round
-    # k's RDD computes round k-1's as a side effect), then the
-    # superseded rounds' blocks are safe to drop — only the returned
-    # frame keeps its checkpoint
-    ranks.count()
-    for frame in pending[:-1]:
-        try:
-            frame.unpersist(blocking=False)
-        except Exception:
-            pass
-    out.unpersist(blocking=False)
-    # verts' checkpoint blocks fed every round but the returned ranks
-    # no longer reference them — keeping them alive per call is the
-    # exact leak the loop hygiene exists to prevent
-    verts.unpersist(blocking=False)
+            # dangling + teleport mass: (1 - damping*flowed)/n, carried as
+            # a broadcast one-row frame so the whole round is ONE job
+            residual = contrib.agg(
+                (
+                    (
+                        F.lit(1.0)
+                        - F.lit(damping)
+                        * F.coalesce(
+                            F.sum("ci").cast("double") / F.lit(1e12),
+                            F.lit(0.0),
+                        )
+                    )
+                    / F.lit(float(n))
+                ).alias("__res")
+            )
+            ranks = scope.checkpoint(
+                verts.join(contrib.select("vertex", "c"), "vertex", "left")
+                .crossJoin(F.broadcast(residual))
+                .select(
+                    "vertex",
+                    (
+                        F.lit(damping) * F.coalesce("c", F.lit(0.0))
+                        + F.col("__res")
+                    ).alias("rank"),
+                )
+            )
+            pending.append(ranks)
+        # ONE action materializes all n_iter lazily-chained rounds (round
+        # k's RDD computes round k-1's as a side effect), then the
+        # superseded rounds' blocks are safe to drop — only the returned
+        # frame keeps its checkpoint
+        ranks.count()
+        for frame in pending[:-1]:
+            scope.release(frame)
+        scope.release(out)
+        # verts' checkpoint blocks fed every round but the returned ranks
+        # no longer reference them — keeping them alive per call is the
+        # exact leak the loop hygiene exists to prevent
+        scope.release(verts)
     return ranks

@@ -26,8 +26,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from data_engineering_spark.operators.materialize import CacheScope, attach
 
 
 def assign_sequential_ids(
@@ -38,11 +41,8 @@ def assign_sequential_ids(
 ) -> DataFrame:
     """See module docstring. The sorted frame is persisted so the
     count pass and the numbering pass observe identical sampled range
-    bounds; ``result.unpersist()`` would NOT release it (the persist
-    lives on an internal frame, not the returned one) — callers that
-    are done with the result release it via
-    ``release_sequential_ids(result)`` (same cache-lifetime contract
-    as the near-dup operators' release_cache)."""
+    bounds; it is attached to the result, and callers that are done
+    with the result free it with ``materialize.release(result)``."""
     cols = [F.col(c) for c in order_cols]
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     sorted_df = (
@@ -53,13 +53,16 @@ def assign_sequential_ids(
     # cache so the count pass and the numbering pass see the SAME
     # sampled range bounds / partition ids (repartitionByRange samples;
     # recomputing it in two independent jobs could draw different cuts)
-    sorted_df = sorted_df.persist()
-    counts = {
-        r["__pid"]: r["n"]
-        for r in sorted_df.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    with CacheScope() as scope:
+        sorted_df = scope.persist(
+            sorted_df, StorageLevel.MEMORY_AND_DISK_DESER
+        )
+        counts = {
+            r["__pid"]: r["n"]
+            for r in sorted_df.groupBy("__pid")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
     offsets, acc = {}, 0
     for pid in sorted(counts):
         offsets[pid] = acc
@@ -76,15 +79,4 @@ def assign_sequential_ids(
         )
         .drop("__pid", "__off")
     )
-    # stash the persisted handle on the result so callers can release
-    # the cache this function pinned (out.unpersist() cannot reach it)
-    out.__dict__["_seq_persisted"] = sorted_df
-    return out
-
-
-def release_sequential_ids(df) -> None:
-    """Release the cache `assign_sequential_ids` pinned for `df`.
-    No-op for frames that did not come from it."""
-    src = df.__dict__.get("_seq_persisted")
-    if src is not None:
-        src.unpersist(blocking=False)
+    return attach(out, sorted_df)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_spark.operators.materialize import CacheScope
 from data_engineering_spark.operators.text import tokens
 
 
@@ -151,95 +152,77 @@ def minhash_incremental_pairs(
     job). Pair orientation: doc_a < doc_b, same as the full operator.
     """
     assert num_hashes % num_bands == 0
-    from pyspark import StorageLevel
+    with CacheScope(release_cache) as scope:
+        sh_new = scope.persist(shingle_rows(new_docs, id_col, text_col, n))
+        bands_new = scope.persist(
+            band_rows(
+                minhash_signatures(sh_new, num_hashes), num_hashes, num_bands
+            )
+        )
 
-    sh_new = shingle_rows(new_docs, id_col, text_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    bands_new = band_rows(
-        minhash_signatures(sh_new, num_hashes), num_hashes, num_bands
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+        nn_a = bands_new.select(F.col("doc").alias("doc_a"), "band", "bucket")
+        nn_b = bands_new.select(F.col("doc").alias("doc_b"), "band", "bucket")
+        within = (
+            nn_a.join(nn_b, ["band", "bucket"])
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b")
+        )
+        cross = (
+            bands_new.select(F.col("doc").alias("new_doc"), "band", "bucket")
+            .join(
+                corpus_index.select(
+                    F.col("doc").alias("corpus_doc"), "band", "bucket"
+                ),
+                ["band", "bucket"],
+            )
+            .select(
+                F.least("new_doc", "corpus_doc").alias("doc_a"),
+                F.greatest("new_doc", "corpus_doc").alias("doc_b"),
+            )
+        )
+        cands = scope.persist(within.union(cross).distinct())
 
-    nn_a = bands_new.select(F.col("doc").alias("doc_a"), "band", "bucket")
-    nn_b = bands_new.select(F.col("doc").alias("doc_b"), "band", "bucket")
-    within = (
-        nn_a.join(nn_b, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    cross = (
-        bands_new.select(F.col("doc").alias("new_doc"), "band", "bucket")
-        .join(
-            corpus_index.select(
-                F.col("doc").alias("corpus_doc"), "band", "bucket"
+        cand_ids = (
+            cands.select(F.col("doc_a").alias("doc"))
+            .union(cands.select(F.col("doc_b").alias("doc")))
+            .distinct()
+        )
+        # corpus text scanned once, pruned to candidate docs before the
+        # expensive shingle/collect stage
+        sh_corpus_cands = shingle_rows(
+            corpus_docs.join(
+                cand_ids.withColumnRenamed("doc", id_col), id_col, "left_semi"
             ),
-            ["band", "bucket"],
+            id_col,
+            text_col,
+            n,
         )
-        .select(
-            F.least("new_doc", "corpus_doc").alias("doc_a"),
-            F.greatest("new_doc", "corpus_doc").alias("doc_b"),
+        sets = (
+            sh_new.join(cand_ids, "doc", "left_semi")
+            .union(sh_corpus_cands)
+            .groupBy("doc")
+            .agg(F.collect_list("g").alias("sh"))
         )
-    )
-    cands = (
-        within.union(cross)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    cand_ids = (
-        cands.select(F.col("doc_a").alias("doc"))
-        .union(cands.select(F.col("doc_b").alias("doc")))
-        .distinct()
-    )
-    # corpus text scanned once, pruned to candidate docs before the
-    # expensive shingle/collect stage
-    sh_corpus_cands = shingle_rows(
-        corpus_docs.join(
-            cand_ids.withColumnRenamed("doc", id_col), id_col, "left_semi"
-        ),
-        id_col,
-        text_col,
-        n,
-    )
-    sets = (
-        sh_new.join(cand_ids, "doc", "left_semi")
-        .union(sh_corpus_cands)
-        .groupBy("doc")
-        .agg(F.collect_list("g").alias("sh"))
-    )
-    sa = sets.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
-    result = (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("common")
-            / (F.size("sh_a") + F.size("sh_b") - F.col("common")),
+        sa = sets.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
+        sb = sets.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
+        result = (
+            cands.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
+            .withColumn(
+                "jaccard",
+                F.col("common")
+                / (F.size("sh_a") + F.size("sh_b") - F.col("common")),
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .select(
+                "doc_a",
+                "doc_b",
+                F.col("common").cast("long").alias("common"),
+                F.col("jaccard").alias("jaccard_r"),
+            )
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("common").cast("long").alias("common"),
-            F.col("jaccard").alias("jaccard_r"),
-        )
-    )
-    if not release_cache:
-        return result
-    from data_engineering_spark.operators.materialize import (
-        eager_checkpoint,
-    )
-
-    # NOT a direct localCheckpoint: the RDD path re-executes the
-    # whole pipeline un-optimized and skips populating the very
-    # persists this flag exists to release (materialize.py)
-    out = eager_checkpoint(result)
-    cands.unpersist()
-    bands_new.unpersist()
-    sh_new.unpersist()
-    return out
+        return scope.result(result)
 
 
 def _shingle_sets_and_bands(
@@ -261,8 +244,8 @@ def _shingle_sets_and_bands(
     the first place) — and the SAME persisted frame is the verify side.
     The old shape paid a (doc,g) distinct shuffle, a signature groupBy
     shuffle, and a second collect_list aggregation behind a semi-join
-    prune. Caller owns the persist (unpersist when done)."""
-    from pyspark import StorageLevel
+    prune. Both persists pass to the enclosing CacheScope (the caller
+    owns them when there is none)."""
     from pyspark.sql import Window
 
     tok = docs.select(
@@ -280,27 +263,24 @@ def _shingle_sets_and_bands(
         .filter(F.col("__last").isNotNull())
         .select("doc", "g")
     )
-    docsets = (
-        grams.groupBy("doc")
-        .agg(F.collect_set("g").alias("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    inv = docsets.select("doc", F.explode("sh").alias("g"))
-    sigs = inv.groupBy("doc").agg(
-        *[
-            F.min(F.xxhash64(F.col("g"), F.lit(i))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    # band rows are consumed 2-4x downstream (both sides of the
-    # candidate self-join; star_edges' agg AND join-back; the verify
-    # path re-reads through them) and each recomputation re-pays the
-    # num_hashes-string-hash signature stage (~0.5 s/scan at sf0.1,
-    # measured) — while the frame itself is num_bands fixed-width rows
-    # per doc, trivially cacheable. Caller owns both persists.
-    bands = band_rows(sigs, num_hashes, num_bands).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    with CacheScope() as scope:
+        docsets = scope.persist(
+            grams.groupBy("doc").agg(F.collect_set("g").alias("sh"))
+        )
+        inv = docsets.select("doc", F.explode("sh").alias("g"))
+        sigs = inv.groupBy("doc").agg(
+            *[
+                F.min(F.xxhash64(F.col("g"), F.lit(i))).alias(f"h{i}")
+                for i in range(num_hashes)
+            ]
+        )
+        # band rows are consumed 2-4x downstream (both sides of the
+        # candidate self-join; star_edges' agg AND join-back; the verify
+        # path re-reads through them) and each recomputation re-pays the
+        # num_hashes-string-hash signature stage (~0.5 s/scan at sf0.1,
+        # measured) — while the frame itself is num_bands fixed-width
+        # rows per doc, trivially cacheable.
+        bands = scope.persist(band_rows(sigs, num_hashes, num_bands))
     return docsets, bands
 
 
@@ -324,60 +304,44 @@ def minhash_near_dup_pairs(
     Default False keeps the plan lazy (the eager pass costs real time;
     LRU eviction handles one-shot pipelines fine)."""
     assert num_hashes % num_bands == 0
-    from pyspark import StorageLevel
-
-    docsets, bands = _shingle_sets_and_bands(
-        docs, id_col, text_col, n, num_hashes, num_bands
-    )
-
-    a = bands.select(F.col("doc").alias("doc_a"), "band", "bucket")
-    b = bands.select(F.col("doc").alias("doc_b"), "band", "bucket")
-    cands = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    with CacheScope(release_cache) as scope:
+        docsets, bands = _shingle_sets_and_bands(
+            docs, id_col, text_col, n, num_hashes, num_bands
+        )
+        a = bands.select(F.col("doc").alias("doc_a"), "band", "bucket")
+        b = bands.select(F.col("doc").alias("doc_b"), "band", "bucket")
         # feeds the two verify joins
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    # exact verify against the persisted sets — two hash joins, no
-    # re-aggregation (AQE broadcasts the small side)
-    sa = docsets.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = docsets.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
-    result = (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("common")
-            / (F.size("sh_a") + F.size("sh_b") - F.col("common")),
+        cands = scope.persist(
+            a.join(b, ["band", "bucket"])
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b")
+            .distinct()
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("common").cast("long").alias("common"),
-            # raw int/int division is bit-identical across engines;
-            # re-rounding it would reintroduce boundary divergence
-            F.col("jaccard").alias("jaccard_r"),
-        )
-    )
-    if not release_cache:
-        return result
-    from data_engineering_spark.operators.materialize import (
-        eager_checkpoint,
-    )
 
-    # NOT a direct localCheckpoint: the RDD path re-executes the
-    # whole pipeline un-optimized and skips populating the very
-    # persists this flag exists to release (materialize.py)
-    out = eager_checkpoint(result)
-    cands.unpersist()
-    bands.unpersist()
-    docsets.unpersist()
-    return out
+        # exact verify against the persisted sets — two hash joins, no
+        # re-aggregation (AQE broadcasts the small side)
+        sa = docsets.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
+        sb = docsets.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
+        result = (
+            cands.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
+            .withColumn(
+                "jaccard",
+                F.col("common")
+                / (F.size("sh_a") + F.size("sh_b") - F.col("common")),
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .select(
+                "doc_a",
+                "doc_b",
+                F.col("common").cast("long").alias("common"),
+                # raw int/int division is bit-identical across engines;
+                # re-rounding it would reintroduce boundary divergence
+                F.col("jaccard").alias("jaccard_r"),
+            )
+        )
+        return scope.result(result)
 
 
 def star_edges(bands: DataFrame) -> DataFrame:
@@ -449,45 +413,45 @@ def minhash_star_clusters(
     components over a linear-size edge list.
     """
     assert num_hashes % num_bands == 0
-
-    docsets, bands = _shingle_sets_and_bands(
-        docs, id_col, text_col, n, num_hashes, num_bands
-    )
-    star = star_edges(bands)
-    if verify:
-        sa = docsets.select(
-            F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a")
-        )
-        sb = docsets.select(
-            F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b")
-        )
-        common = F.size(F.array_intersect("sh_a", "sh_b"))
-        star = (
-            star.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .withColumn(
-                "__j",
-                common / (F.size("sh_a") + F.size("sh_b") - common),
-            )
-            .filter(F.col("__j") >= threshold)
-            .select("doc_a", "doc_b")
-        )
     from data_engineering_spark.operators.graph import connected_components
 
-    # star_edges emits a DISTINCT canonical pair list (rep < member by
-    # construction, .distinct() inside; verify only filters rows) —
-    # skip CC's union+distinct shuffle
-    comp = connected_components(
-        star, "doc_a", "doc_b", edges_unique=True
-    )
-    # connected_components materializes its edge input EAGERLY (the
-    # persist+count at graph.py's entry) and returns checkpointed
-    # labels, so the bands/docsets caches are fully consumed by this
-    # point and nothing in the returned plan re-reads them — release
-    # unconditionally (the r6 ADVICE leak: repeated star-path calls in
-    # a long-lived session accumulated cached band blocks forever)
-    bands.unpersist(blocking=False)
-    docsets.unpersist(blocking=False)
+    with CacheScope() as scope:
+        docsets, bands = _shingle_sets_and_bands(
+            docs, id_col, text_col, n, num_hashes, num_bands
+        )
+        star = star_edges(bands)
+        if verify:
+            sa = docsets.select(
+                F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a")
+            )
+            sb = docsets.select(
+                F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b")
+            )
+            common = F.size(F.array_intersect("sh_a", "sh_b"))
+            star = (
+                star.join(sa, "doc_a")
+                .join(sb, "doc_b")
+                .withColumn(
+                    "__j",
+                    common / (F.size("sh_a") + F.size("sh_b") - common),
+                )
+                .filter(F.col("__j") >= threshold)
+                .select("doc_a", "doc_b")
+            )
+        # star_edges emits a DISTINCT canonical pair list (rep < member by
+        # construction, .distinct() inside; verify only filters rows) —
+        # skip CC's union+distinct shuffle
+        comp = connected_components(
+            star, "doc_a", "doc_b", edges_unique=True
+        )
+        # connected_components materializes its edge input EAGERLY (the
+        # persist+count at graph.py's entry) and returns checkpointed
+        # labels, so the bands/docsets caches are fully consumed by this
+        # point and nothing in the returned plan re-reads them — release
+        # unconditionally (the r6 ADVICE leak: repeated star-path calls in
+        # a long-lived session accumulated cached band blocks forever)
+        scope.release(bands)
+        scope.release(docsets)
     return (
         docs.select(F.col(id_col))
         .join(

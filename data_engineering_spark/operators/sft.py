@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_spark.operators.materialize import CacheScope
 from data_engineering_spark.operators.text import tokens
 
 CHAT_BOT = "<|im_start|>"  # begin-of-turn
@@ -232,8 +233,6 @@ def conversation_dedup(
     returning — for long-lived sessions that must not accumulate
     cached blocks per call (same contract as minhash/similarity
     release_cache; VERDICT r10 nit #3)."""
-    from pyspark import StorageLevel
-
     # keyed feeds two consumers (group stats + the join back); each
     # recomputation re-pays the conv-assembly shuffle, so the
     # fixed-width (conv_id, 64-char key) frame persists — the dsir
@@ -250,33 +249,28 @@ def conversation_dedup(
             ),
         ),
     )
-    keyed = st.select(
-        "conv_id",
-        F.sha2(F.array_join(norm, "\x1f"), 256).alias("__key"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    grp = keyed.groupBy("__key").agg(
-        F.count(F.lit(1)).alias("n_copies"),
-        F.min("conv_id").alias("__canon"),
-    )
-    result = (
-        keyed.join(grp, "__key")
-        .select(
-            "conv_id",
-            F.col("n_copies").cast("long").alias("n_copies"),
-            (F.col("conv_id") == F.col("__canon")).alias(
-                "is_canonical"
-            ),
+    with CacheScope(release_cache) as scope:
+        keyed = scope.persist(
+            st.select(
+                "conv_id",
+                F.sha2(F.array_join(norm, "\x1f"), 256).alias("__key"),
+            )
         )
-    )
-    if not release_cache:
-        return result
-    from data_engineering_spark.operators.materialize import (
-        eager_checkpoint,
-    )
-
-    out = eager_checkpoint(result)
-    keyed.unpersist()
-    return out
+        grp = keyed.groupBy("__key").agg(
+            F.count(F.lit(1)).alias("n_copies"),
+            F.min("conv_id").alias("__canon"),
+        )
+        result = (
+            keyed.join(grp, "__key")
+            .select(
+                "conv_id",
+                F.col("n_copies").cast("long").alias("n_copies"),
+                (F.col("conv_id") == F.col("__canon")).alias(
+                    "is_canonical"
+                ),
+            )
+        )
+        return scope.result(result)
 
 
 def preference_pairs(
@@ -406,63 +400,52 @@ def turn_token_counts(
     # spine, and the role join-back below. Left un-marked, each scan
     # re-executes the caller's whole turn-synthesis subtree (measured
     # 0.8 s/scan at sf0.1 — the tokenize + slice + explode pipeline of
-    # synthesize_turns). Persist the 4-column projection once;
-    # catalog-tracked MEMORY_AND_DISK with the same session-carry /
-    # clearCache contract as text.ngram_jaccard_pairs' internals —
-    # release_cache=True is the long-lived-session escape hatch
-    # (VERDICT r11 #6).
-    from pyspark import StorageLevel
-
-    t = turns.select(
-        F.col(conv_col).cast("long").alias("conv_id"),
-        F.col(idx_col).cast("long").alias("turn_idx"),
-        F.col(role_col).alias("role"),
-        F.col(text_col).alias("turn_text"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # assert_true returns NULL when the predicate holds and throws
-    # otherwise; gating the composite id on its nullity forces the
-    # check into the same projection with zero extra jobs.
-    in_range = (F.col("turn_idx") >= 0) & (F.col("turn_idx") < width)
-    guard = F.assert_true(
-        in_range,
-        F.concat(
-            F.lit(
-                f"turn_token_counts: turn_idx out of [0, {width}) "
-                "(raise max_turns): "
+    # synthesize_turns). Persist the 4-column projection once.
+    with CacheScope(release_cache) as scope:
+        t = scope.persist(
+            turns.select(
+                F.col(conv_col).cast("long").alias("conv_id"),
+                F.col(idx_col).cast("long").alias("turn_idx"),
+                F.col(role_col).alias("role"),
+                F.col(text_col).alias("turn_text"),
+            )
+        )
+        # assert_true returns NULL when the predicate holds and throws
+        # otherwise; gating the composite id on its nullity forces the
+        # check into the same projection with zero extra jobs.
+        in_range = (F.col("turn_idx") >= 0) & (F.col("turn_idx") < width)
+        guard = F.assert_true(
+            in_range,
+            F.concat(
+                F.lit(
+                    f"turn_token_counts: turn_idx out of [0, {width}) "
+                    "(raise max_turns): "
+                ),
+                F.col("turn_idx").cast("string"),
             ),
-            F.col("turn_idx").cast("string"),
-        ),
-    )
-    composite = t.select(
-        F.when(
-            guard.isNull(),
-            F.col("conv_id") * width + F.col("turn_idx"),
-        ).alias("__tid"),
-        "turn_text",
-    )
-    per_turn = bpe_doc_token_counts(
-        composite, merges, id_col="__tid", text_col="turn_text"
-    )
-    # `div` is integral division on longs — exact at 64-bit id scale,
-    # where floor(double / width) would lose precision (ADVICE r10).
-    result = per_turn.select(
-        F.expr(f"__tid div {width}").cast("long").alias("conv_id"),
-        F.pmod("__tid", F.lit(width)).cast("long").alias("turn_idx"),
-        "n_words",
-        "n_bpe_tokens",
-    ).join(
-        t.select("conv_id", "turn_idx", "role"),
-        ["conv_id", "turn_idx"],
-    )
-    if not release_cache:
-        return result
-    from data_engineering_spark.operators.materialize import (
-        eager_checkpoint,
-    )
-
-    out = eager_checkpoint(result)
-    t.unpersist()
-    return out
+        )
+        composite = t.select(
+            F.when(
+                guard.isNull(),
+                F.col("conv_id") * width + F.col("turn_idx"),
+            ).alias("__tid"),
+            "turn_text",
+        )
+        per_turn = bpe_doc_token_counts(
+            composite, merges, id_col="__tid", text_col="turn_text"
+        )
+        # `div` is integral division on longs — exact at 64-bit id scale,
+        # where floor(double / width) would lose precision (ADVICE r10).
+        result = per_turn.select(
+            F.expr(f"__tid div {width}").cast("long").alias("conv_id"),
+            F.pmod("__tid", F.lit(width)).cast("long").alias("turn_idx"),
+            "n_words",
+            "n_bpe_tokens",
+        ).join(
+            t.select("conv_id", "turn_idx", "role"),
+            ["conv_id", "turn_idx"],
+        )
+        return scope.result(result)
 
 
 def context_windows(

@@ -22,10 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_spark.operators.dedup import fingerprint_expr
-from data_engineering_spark.operators.ids import (
-    assign_sequential_ids,
-    release_sequential_ids,
-)
+from data_engineering_spark.operators.ids import assign_sequential_ids
+from data_engineering_spark.operators.materialize import release
 
 
 def _row_fp(order_cols: Sequence[str]) -> F.Column:
@@ -105,7 +103,7 @@ def write_sharded_dataset(
     # assign_sequential_ids pinned (one full-corpus copy per export
     # otherwise). The returned manifest re-reads the written parquet,
     # so it stays valid after the release.
-    release_sequential_ids(seq)
+    release(seq)
     return df.sparkSession.read.parquet(f"{path}/_manifest")
 
 

@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_spark.operators.materialize import CacheScope
+
 
 def as_double_vec(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -956,33 +958,16 @@ def lsh_bucketed_similarity_join(
     banded = _lsh_banded(
         vectors, id_col, vec_col, dim, num_bands, planes_per_band, seed
     )
-    survivors, persisted = _score_buckets(
-        banded, threshold, max_bucket_rows=max_bucket_rows
-    )
-    # a pair found in several bands reappears with the bitwise-same
-    # cosine (same vectors, same GEMM); max is the safe dedup reducer
-    result = (
-        survivors.groupBy("id_a", "id_b")
-        .agg(F.round(F.max("cosine"), 6).alias("cosine_r"))
-    )
-    return _release_after(result, persisted, release_cache)
-
-
-def _release_after(result: DataFrame, persisted, release_cache: bool):
-    """Tiled scoring persists the banded frame (the size probe is a
-    second consumer); `release_cache=True` eagerly materializes the
-    (output-sized) result and unpersists it — for long-lived sessions
-    that must not accumulate cached blocks per call. Same contract as
-    minhash/text release_cache. No-op when nothing was persisted."""
-    if not release_cache or persisted is None:
-        return result
-    from data_engineering_spark.operators.materialize import (
-        eager_checkpoint,
-    )
-
-    out = eager_checkpoint(result)
-    persisted.unpersist()
-    return out
+    with CacheScope(release_cache) as scope:
+        survivors = _score_buckets(
+            banded, threshold, max_bucket_rows=max_bucket_rows
+        )
+        # a pair found in several bands reappears with the bitwise-same
+        # cosine (same vectors, same GEMM); max is the safe dedup reducer
+        return scope.result(
+            survivors.groupBy("id_a", "id_b")
+            .agg(F.round(F.max("cosine"), 6).alias("cosine_r"))
+        )
 
 
 def _score_buckets(
@@ -990,7 +975,7 @@ def _score_buckets(
     threshold: float,
     mixed: bool = False,
     max_bucket_rows: int | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
+) -> DataFrame:
     """Bucket-local exact scoring: each (band, bucket) group GEMMs its
     own members and emits only pairs at/above threshold — candidate
     pairs exist as numpy flops, never as shuffle rows. A bucket of m
@@ -1025,7 +1010,6 @@ def _score_buckets(
     block = 2048
     tiled = max_bucket_rows is not None
     group_cols = ["band", "bucket"]
-    persisted = None
     if tiled:
         cap = int(max_bucket_rows)
         if cap < 2:
@@ -1036,11 +1020,9 @@ def _score_buckets(
         # the size probe is a SECOND consumer of the banding sign-GEMM;
         # persist so the Arrow banding pass runs once, not twice
         # (measured 2x on the clique curve without this). Lazy persist,
-        # LRU-evicted — the handle is returned so public callers can
-        # offer release_cache (see _release_after).
-        from pyspark import StorageLevel
-
-        banded = persisted = banded.persist(StorageLevel.MEMORY_AND_DISK)
+        # passed on to the calling operator's scope (release_cache).
+        with CacheScope() as scope:
+            banded = scope.persist(banded)
         fat = (
             banded.groupBy("band", "bucket")
             .agg(F.count(F.lit(1)).alias("__m"))
@@ -1174,10 +1156,9 @@ def _score_buckets(
         newmask = pdf["__new"].to_numpy()[order] if mixed else None
         return _score_triangular(ids, V, newmask)
 
-    scored = banded.groupBy(*group_cols).applyInPandas(
+    return banded.groupBy(*group_cols).applyInPandas(
         score_bucket, "id_a long, id_b long, cosine double"
     )
-    return scored, persisted
 
 
 def embedding_lsh_index(
@@ -1290,14 +1271,14 @@ def embedding_incremental_pairs(
             "id", "__v", "band", "bucket", F.lit(True).alias("__new")
         )
     )
-    survivors, persisted = _score_buckets(
-        union, threshold, mixed=True, max_bucket_rows=max_bucket_rows
-    )
-    result = (
-        survivors.groupBy("id_a", "id_b")
-        .agg(F.round(F.max("cosine"), 6).alias("cosine_r"))
-    )
-    return _release_after(result, persisted, release_cache)
+    with CacheScope(release_cache) as scope:
+        survivors = _score_buckets(
+            union, threshold, mixed=True, max_bucket_rows=max_bucket_rows
+        )
+        return scope.result(
+            survivors.groupBy("id_a", "id_b")
+            .agg(F.round(F.max("cosine"), 6).alias("cosine_r"))
+        )
 
 
 def mmr_topk(

@@ -13,6 +13,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_spark.operators.materialize import CacheScope
+
 # small multilingual stopword sample — enough for quality ratios and a
 # deterministic language heuristic; swap for a real list in production.
 STOPWORDS = {
@@ -150,7 +152,6 @@ def ngram_jaccard_pairs(
     # 5k docs; projection barriers get collapsed through). Every
     # expression here is linear and the generator child is a cheap
     # split().
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     tok = docs.select(
@@ -170,199 +171,183 @@ def ngram_jaccard_pairs(
     )
     if verify not in ("sets", "join"):
         raise ValueError(f"verify must be 'sets' or 'join': {verify!r}")
-    if verify == "sets":
-        # ONE aggregation builds the per-doc distinct shingle SET: the
-        # window above already hash-partitioned rows by doc, so
-        # collect_set adds no shuffle, sizes come free as size(sh), and
-        # the SAME frame serves candidate generation (exploded) and
-        # exact verification (as-is) — the old shape paid a (doc,g)
-        # distinct shuffle, a sizes aggregation + join, AND a second
-        # collect_list aggregation for verify. Persisted: set bytes ≈
-        # corpus text bytes, MEMORY_AND_DISK spills instead of OOMing
-        # at scale.
-        docsets = (
-            grams.groupBy("doc")
-            .agg(F.collect_set("g").alias("sh"))
-            .withColumn("n_sh", F.size("sh"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        inv = docsets.select("doc", "n_sh", F.explode("sh").alias("g"))
-        cached = docsets
-    else:
-        # row-bounded layout: distinct (doc, shingle) rows with the doc
-        # size as an unordered analytic count — the shingle window
-        # above already partitioned by doc, and no row ever holds more
-        # than one shingle, so a 10⁸-shingle document is just 10⁸ rows
-        # spread across tasks instead of one giant array cell.
-        docsets = None
-        inv = (
-            grams.distinct()
-            .withColumn(
-                "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc"))
+    with CacheScope(release_cache) as scope:
+        if verify == "sets":
+            # ONE aggregation builds the per-doc distinct shingle SET: the
+            # window above already hash-partitioned rows by doc, so
+            # collect_set adds no shuffle, sizes come free as size(sh), and
+            # the SAME frame serves candidate generation (exploded) and
+            # exact verification (as-is) — the old shape paid a (doc,g)
+            # distinct shuffle, a sizes aggregation + join, AND a second
+            # collect_list aggregation for verify. Persisted: set bytes ≈
+            # corpus text bytes, MEMORY_AND_DISK spills instead of OOMing
+            # at scale.
+            docsets = scope.persist(
+                grams.groupBy("doc")
+                .agg(F.collect_set("g").alias("sh"))
+                .withColumn("n_sh", F.size("sh"))
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        cached = inv
+            inv = docsets.select("doc", "n_sh", F.explode("sh").alias("g"))
+        else:
+            # row-bounded layout: distinct (doc, shingle) rows with the doc
+            # size as an unordered analytic count — the shingle window
+            # above already partitioned by doc, and no row ever holds more
+            # than one shingle, so a 10⁸-shingle document is just 10⁸ rows
+            # spread across tasks instead of one giant array cell.
+            docsets = None
+            inv = scope.persist(
+                grams.distinct().withColumn(
+                    "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc"))
+                )
+            )
 
-    if not prefix_filter:
-        a = inv.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("na"), "g")
-        b = inv.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("nb"), "g")
-        pairs = (
+        if not prefix_filter:
+            a = inv.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("na"), "g")
+            b = inv.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("nb"), "g")
+            pairs = (
+                a.join(b, ["g"])
+                .filter(F.col("doc_a") < F.col("doc_b"))
+                .groupBy("doc_a", "doc_b", "na", "nb")
+                .agg(F.count(F.lit(1)).alias("common"))
+            )
+            jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
+            return scope.result(
+                pairs.withColumn("jaccard", jac)
+                .filter(F.col("jaccard") >= threshold)
+                .select(
+                    "doc_a", "doc_b",
+                    F.col("common").cast("long").alias("common"),
+                    # raw int/int division is bit-identical across engines;
+                    # re-rounding it would reintroduce boundary divergence
+                    F.col("jaccard").alias("jaccard_r"),
+                )
+            )
+
+        # Full PPJoin (Xiao et al.): rank shingles by ascending document
+        # frequency (rarest first — hot shingles almost never enter a
+        # prefix), then generate candidates from a prefix self-join with
+        # THREE exact filters stacked:
+        #   probe prefix   |B| - ceil(t·|B|) + 1      (classic AllPairs)
+        #   index prefix   |A| - ceil(2t/(1+t)·|A|) + 1 on the SMALLER side
+        #                  — shorter, valid because overlap ≥ t/(1+t)(na+nb)
+        #   position filter 1 + min(na-pa, nb-pb) ≥ ceil(t/(1+t)·(na+nb))
+        #                  — the first common shingle always satisfies it,
+        #                  so no pair is lost; late-prefix coincidences are.
+        # (Float note: every coefficient is ≤ its real value, so each ceil
+        # can only under-shoot — prefixes get longer, bounds looser: errors
+        # ADD candidates, never drop a true pair.)
+        # Measured at sf0.1 (5k docs): candidates 193k → 54k, end-to-end
+        # 4.8 s → 2.1 s cold-cache.
+        freq = inv.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+        ranked = inv.join(freq, "g").withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("doc").orderBy(F.asc("df"), F.asc("g"))
+            ),
+        )
+        probe_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
+        mid_len = (
+            F.col("n_sh")
+            - F.ceil(F.lit(2.0 * threshold / (1.0 + threshold)) * F.col("n_sh"))
+            + 1
+        )
+        probe = ranked.filter(F.col("rn") <= probe_len)
+        a = probe.filter(F.col("rn") <= mid_len).select(
+            F.col("doc").alias("doc_a"),
+            F.col("n_sh").alias("na"),
+            F.col("rn").alias("pa"),
+            "g",
+        )
+        b = probe.select(
+            F.col("doc").alias("doc_b"),
+            F.col("n_sh").alias("nb"),
+            F.col("rn").alias("pb"),
+            "g",
+        )
+        o_min = F.ceil(
+            F.lit(threshold / (1.0 + threshold)) * (F.col("na") + F.col("nb"))
+        )
+        cands = (
             a.join(b, ["g"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b", "na", "nb")
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-        jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-        return (
-            pairs.withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
+            .filter(
+                # orientation: A is the smaller set (ties: smaller id) —
+                # that is what licenses A's shorter index prefix
+                (
+                    (F.col("na") < F.col("nb"))
+                    | ((F.col("na") == F.col("nb")) & (F.col("doc_a") < F.col("doc_b")))
+                )
+                # length bound: t·|B| ≤ |A| is necessary for jac ≥ t
+                & (F.col("nb") * F.lit(threshold) <= F.col("na"))
+                # position filter
+                & (
+                    F.lit(1)
+                    + F.least(F.col("na") - F.col("pa"), F.col("nb") - F.col("pb"))
+                    >= o_min
+                )
+            )
             .select(
-                "doc_a", "doc_b",
-                F.col("common").cast("long").alias("common"),
-                # raw int/int division is bit-identical across engines;
-                # re-rounding it would reintroduce boundary divergence
-                F.col("jaccard").alias("jaccard_r"),
+                F.least("doc_a", "doc_b").alias("doc_a"),
+                F.greatest("doc_a", "doc_b").alias("doc_b"),
             )
+            .distinct()
         )
+        # candidate pairs feed the two verify joins; persist so the
+        # prefix-join subtree runs once. Candidate sets are small by
+        # construction (that is the whole point of the prefix filter).
+        cands = scope.persist(cands)
 
-    # Full PPJoin (Xiao et al.): rank shingles by ascending document
-    # frequency (rarest first — hot shingles almost never enter a
-    # prefix), then generate candidates from a prefix self-join with
-    # THREE exact filters stacked:
-    #   probe prefix   |B| - ceil(t·|B|) + 1      (classic AllPairs)
-    #   index prefix   |A| - ceil(2t/(1+t)·|A|) + 1 on the SMALLER side
-    #                  — shorter, valid because overlap ≥ t/(1+t)(na+nb)
-    #   position filter 1 + min(na-pa, nb-pb) ≥ ceil(t/(1+t)·(na+nb))
-    #                  — the first common shingle always satisfies it,
-    #                  so no pair is lost; late-prefix coincidences are.
-    # (Float note: every coefficient is ≤ its real value, so each ceil
-    # can only under-shoot — prefixes get longer, bounds looser: errors
-    # ADD candidates, never drop a true pair.)
-    # Measured at sf0.1 (5k docs): candidates 193k → 54k, end-to-end
-    # 4.8 s → 2.1 s cold-cache.
-    freq = inv.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    ranked = inv.join(freq, "g").withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("doc").orderBy(F.asc("df"), F.asc("g"))
-        ),
-    )
-    probe_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    mid_len = (
-        F.col("n_sh")
-        - F.ceil(F.lit(2.0 * threshold / (1.0 + threshold)) * F.col("n_sh"))
-        + 1
-    )
-    probe = ranked.filter(F.col("rn") <= probe_len)
-    a = probe.filter(F.col("rn") <= mid_len).select(
-        F.col("doc").alias("doc_a"),
-        F.col("n_sh").alias("na"),
-        F.col("rn").alias("pa"),
-        "g",
-    )
-    b = probe.select(
-        F.col("doc").alias("doc_b"),
-        F.col("n_sh").alias("nb"),
-        F.col("rn").alias("pb"),
-        "g",
-    )
-    o_min = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("na") + F.col("nb"))
-    )
-    cands = (
-        a.join(b, ["g"])
-        .filter(
-            # orientation: A is the smaller set (ties: smaller id) —
-            # that is what licenses A's shorter index prefix
-            (
-                (F.col("na") < F.col("nb"))
-                | ((F.col("na") == F.col("nb")) & (F.col("doc_a") < F.col("doc_b")))
+        if verify == "sets":
+            # verify: exact intersection of the persisted shingle sets —
+            # two hash joins against docsets (AQE broadcasts the small
+            # side), no re-aggregation.
+            sa = docsets.select(
+                F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a")
             )
-            # length bound: t·|B| ≤ |A| is necessary for jac ≥ t
-            & (F.col("nb") * F.lit(threshold) <= F.col("na"))
-            # position filter
-            & (
-                F.lit(1)
-                + F.least(F.col("na") - F.col("pa"), F.col("nb") - F.col("pb"))
-                >= o_min
+            sb = docsets.select(
+                F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b")
             )
-        )
-        .select(
-            F.least("doc_a", "doc_b").alias("doc_a"),
-            F.greatest("doc_a", "doc_b").alias("doc_b"),
-        )
-        .distinct()
-    )
-    # candidate pairs feed the two verify joins; persist so the
-    # prefix-join subtree runs once. Candidate sets are small by
-    # construction (that is the whole point of the prefix filter).
-    cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-
-    if verify == "sets":
-        # verify: exact intersection of the persisted shingle sets —
-        # two hash joins against docsets (AQE broadcasts the small
-        # side), no re-aggregation.
-        sa = docsets.select(
-            F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a")
-        )
-        sb = docsets.select(
-            F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b")
-        )
-        verified = (
-            cands.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "jaccard",
-                F.col("common")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("common")),
+            verified = (
+                cands.join(sa, "doc_a")
+                .join(sb, "doc_b")
+                .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
+                .withColumn(
+                    "jaccard",
+                    F.col("common")
+                    / (F.size("sh_a") + F.size("sh_b") - F.col("common")),
+                )
+                .filter(F.col("jaccard") >= threshold)
             )
-            .filter(F.col("jaccard") >= threshold)
-        )
-    else:
-        # verify: count common shingles through the pair×shingle
-        # equi-join — every candidate pair shares at least its joining
-        # prefix shingle, so no true pair can vanish from the groupBy.
-        ia = inv.select(
-            F.col("doc").alias("doc_a"), F.col("n_sh").alias("na"), "g"
-        )
-        ib = inv.select(
-            F.col("doc").alias("doc_b"), F.col("n_sh").alias("nb"), "g"
-        )
-        verified = (
-            cands.join(ia, "doc_a")
-            .join(ib, ["doc_b", "g"])
-            .groupBy("doc_a", "doc_b", "na", "nb")
-            .agg(F.count(F.lit(1)).alias("common"))
-            .withColumn(
-                "jaccard",
-                F.col("common")
-                / (F.col("na") + F.col("nb") - F.col("common")),
+        else:
+            # verify: count common shingles through the pair×shingle
+            # equi-join — every candidate pair shares at least its joining
+            # prefix shingle, so no true pair can vanish from the groupBy.
+            ia = inv.select(
+                F.col("doc").alias("doc_a"), F.col("n_sh").alias("na"), "g"
             )
-            .filter(F.col("jaccard") >= threshold)
+            ib = inv.select(
+                F.col("doc").alias("doc_b"), F.col("n_sh").alias("nb"), "g"
+            )
+            verified = (
+                cands.join(ia, "doc_a")
+                .join(ib, ["doc_b", "g"])
+                .groupBy("doc_a", "doc_b", "na", "nb")
+                .agg(F.count(F.lit(1)).alias("common"))
+                .withColumn(
+                    "jaccard",
+                    F.col("common")
+                    / (F.col("na") + F.col("nb") - F.col("common")),
+                )
+                .filter(F.col("jaccard") >= threshold)
+            )
+        result = verified.select(
+            "doc_a",
+            "doc_b",
+            F.col("common").cast("long").alias("common"),
+            # raw int/int division is bit-identical across engines;
+            # re-rounding it would reintroduce boundary divergence
+            F.col("jaccard").alias("jaccard_r"),
         )
-    result = verified.select(
-        "doc_a",
-        "doc_b",
-        F.col("common").cast("long").alias("common"),
-        # raw int/int division is bit-identical across engines;
-        # re-rounding it would reintroduce boundary divergence
-        F.col("jaccard").alias("jaccard_r"),
-    )
-    if not release_cache:
-        return result
-    from data_engineering_spark.operators.materialize import (
-        eager_checkpoint,
-    )
-
-    # NOT a direct localCheckpoint: the RDD path re-executes the
-    # whole pipeline un-optimized and skips populating the very
-    # persists this flag exists to release (materialize.py)
-    out = eager_checkpoint(result)
-    cands.unpersist()
-    cached.unpersist()
-    return out
+        return scope.result(result)
 
 
 def language_score(col: Column | str, lang: str) -> Column:
@@ -844,68 +829,60 @@ def span_dedup(
     long-lived sessions pass ``release_cache=True`` to eagerly
     materialize the result and unpersist.
     """
-    from pyspark import StorageLevel
-
     toks_df = docs.select(F.col(id_col), tokens(text_col).alias("__t"))
     n_blocks = F.ceil(F.size("__t") / F.lit(block)).cast("int")
-    blocks = toks_df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(n_blocks, F.lit(1)) - 1),
-                lambda i: F.array_join(
-                    F.slice("__t", i * block + 1, block), " "
-                ),
+    with CacheScope(release_cache) as scope:
+        blocks = scope.persist(
+            toks_df.select(
+                F.col(id_col),
+                F.posexplode(
+                    F.transform(
+                        F.sequence(
+                            F.lit(0), F.greatest(n_blocks, F.lit(1)) - 1
+                        ),
+                        lambda i: F.array_join(
+                            F.slice("__t", i * block + 1, block), " "
+                        ),
+                    )
+                ).alias("block_idx", "block_text"),
             )
-        ).alias("block_idx", "block_text"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    first = blocks.groupBy("block_text").agg(
-        F.min(F.struct(F.col(id_col), F.col("block_idx"))).alias("__first")
-    )
-    kept = blocks.join(first, "block_text").filter(
-        (F.col(id_col) == F.col(f"__first.{id_col}"))
-        & (F.col("block_idx") == F.col("__first.block_idx"))
-    )
-    rebuilt = kept.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_kept_blocks"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("block_idx", "block_text"))
-                ),
-                lambda s: s["block_text"],
-            ),
-            " ",
-        ).alias("clean_text"),
-    )
-    totals = blocks.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_blocks")
-    )
-    result = (
-        docs.select(F.col(id_col))
-        .join(totals, id_col, "left")
-        .join(rebuilt, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_blocks", F.lit(0)).cast("long").alias("n_blocks"),
-            F.coalesce("n_kept_blocks", F.lit(0))
-            .cast("long")
-            .alias("n_kept_blocks"),
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
         )
-    )
-    if not release_cache:
-        return result
-    from data_engineering_spark.operators.materialize import (
-        eager_checkpoint,
-    )
-
-    # NOT a direct localCheckpoint: the RDD path re-executes the
-    # whole pipeline un-optimized and skips populating the very
-    # persists this flag exists to release (materialize.py)
-    out = eager_checkpoint(result)
-    blocks.unpersist()
-    return out
+        first = blocks.groupBy("block_text").agg(
+            F.min(F.struct(F.col(id_col), F.col("block_idx"))).alias("__first")
+        )
+        kept = blocks.join(first, "block_text").filter(
+            (F.col(id_col) == F.col(f"__first.{id_col}"))
+            & (F.col("block_idx") == F.col("__first.block_idx"))
+        )
+        rebuilt = kept.groupBy(id_col).agg(
+            F.count(F.lit(1)).alias("n_kept_blocks"),
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(F.struct("block_idx", "block_text"))
+                    ),
+                    lambda s: s["block_text"],
+                ),
+                " ",
+            ).alias("clean_text"),
+        )
+        totals = blocks.groupBy(id_col).agg(
+            F.count(F.lit(1)).alias("n_blocks")
+        )
+        result = (
+            docs.select(F.col(id_col))
+            .join(totals, id_col, "left")
+            .join(rebuilt, id_col, "left")
+            .select(
+                F.col(id_col),
+                F.coalesce("n_blocks", F.lit(0)).cast("long").alias("n_blocks"),
+                F.coalesce("n_kept_blocks", F.lit(0))
+                .cast("long")
+                .alias("n_kept_blocks"),
+                F.coalesce("clean_text", F.lit("")).alias("clean_text"),
+            )
+        )
+        return scope.result(result)
 
 
 def content_defined_chunks(

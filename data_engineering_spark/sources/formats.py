@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_engineering_spark.operators.materialize import attach
+
 SUPPORTED = ("parquet", "orc", "csv", "json", "text")
 
 _CSV_DEFAULTS = {
@@ -188,6 +190,8 @@ def read_json_with_quarantine(
     columns; `quarantined` is (raw_line) for reprocessing — the same
     philosophy as the CDC envelope quarantine. The split is one cached
     scan, two filters; schema is still explicit (no inference pass).
+    Free the cached scan with `operators.materialize.release` on
+    either frame once done with both.
     """
     corrupt = "__corrupt_record"
     if isinstance(schema, str):
@@ -215,20 +219,8 @@ def read_json_with_quarantine(
     )
     # both returned frames read through the cached parent, which the
     # caller otherwise has no handle to release — a per-call cache
-    # leak on a long-lived ingest driver. Stash the handle (ids.py
-    # pattern) and release via release_json_quarantine_cache.
-    good.__dict__["_quarantine_cached"] = df
-    bad.__dict__["_quarantine_cached"] = df
-    return good, bad
-
-
-def release_json_quarantine_cache(df: DataFrame) -> None:
-    """Release the cached scan behind a frame returned by
-    `read_json_with_quarantine` (no-op for other frames). Call when
-    done with BOTH returned frames."""
-    src = df.__dict__.get("_quarantine_cached")
-    if src is not None:
-        src.unpersist(blocking=False)
+    # leak on a long-lived ingest driver
+    return attach(good, df), attach(bad, df)
 
 
 def read_parquet_robust(

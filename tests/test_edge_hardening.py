@@ -763,39 +763,6 @@ def test_weighted_quantile_rejects_degenerate_q(spark):
         weighted_quantile(df, "v", "w", ["g"], q=1.5)
 
 
-def test_result_cache_distinguishes_hash_literals(spark, tmp_path):
-    """The old key normalization stripped '#<digits>' inside string
-    LITERALS too, colliding filter(s=='x#1') with filter(s=='x#2') and
-    serving the wrong query's rows from cache."""
-    from data_engineering_spark.operators.result_cache import (
-        cache_key,
-        cached_result,
-    )
-
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [("x#1", 1), ("x#2", 2)], "s string, v int"
-    ).write.parquet(src)
-    base = spark.read.parquet(src)
-    d1 = base.filter(F.col("s") == "x#1")
-    d2 = base.filter(F.col("s") == "x#2")
-    assert cache_key(d1) != cache_key(d2)
-    root = str(tmp_path / "cache")
-    os.makedirs(root)
-    assert [r["v"] for r in cached_result(d1, root).collect()] == [1]
-    assert [r["v"] for r in cached_result(d2, root).collect()] == [2]
-    # crash debris: an old __build dir is swept, a fresh one survives
-    import time
-
-    dead = os.path.join(root, "__build-deadbeef-1")
-    os.makedirs(dead)
-    os.utime(dead, (time.time() - 7200, time.time() - 7200))
-    live = os.path.join(root, "__build-cafe-2")
-    os.makedirs(live)
-    cached_result(base.filter(F.col("v") > 0), root).collect()
-    assert not os.path.exists(dead) and os.path.exists(live)
-
-
 def test_parquet_robust_keeps_partition_columns(spark, tmp_path):
     from data_engineering_spark.sources.formats import read_parquet_robust
 

@@ -167,6 +167,7 @@ def test_read_binary_documents_feeds_wav_decode(spark, tmp_path):
 
 
 def test_read_json_with_quarantine(spark, tmp_path):
+    from data_engineering_spark.operators.materialize import release
     from data_engineering_spark.sources.formats import (
         read_json_with_quarantine,
     )
@@ -178,6 +179,7 @@ def test_read_json_with_quarantine(spark, tmp_path):
         '{"id": 2, "v": "b"}\n'
         '{"id": "NOT_A_NUMBER_{", "v": []}\n'
     )
+    spark.catalog.clearCache()
     good, bad = read_json_with_quarantine(
         spark, str(p), "id bigint, v string"
     )
@@ -187,6 +189,9 @@ def test_read_json_with_quarantine(spark, tmp_path):
     bad_lines = sorted(r["raw_line"] for r in bad.collect())
     assert len(bad_lines) == 2
     assert any("not json" in l for l in bad_lines)
+    # the cached scan behind both frames is attached for the caller
+    release(good)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_read_parquet_robust_names_corrupt_files(spark, tmp_path):
