@@ -2,29 +2,22 @@
 
 The engine's scale posture is enforced, not hoped for: tests assert that
 dimension joins broadcast, that filters reach the parquet scan
-(PushedFilters), and that scans prune columns (ReadSchema). See
-tests/test_plans.py.
+(PushedFilters), that scans prune columns (ReadSchema), and that no
+plan carries the scale-killers `scale_violations` finds. See
+tests/test_plans.py and tests/test_plan_budgets.py.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     """The physical plan as text (what df.explain(mode) prints)."""
-    try:
-        qe = df._jdf.queryExecution()
-        jvm = df.sparkSession._jvm
-        return jvm.PythonSQLUtils.explainString(qe, mode)
-    except Exception:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain(mode=mode)
-        return buf.getvalue()
+    jvm = df.sparkSession._jvm
+    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
 def uses_broadcast_join(df: DataFrame) -> bool:
@@ -48,31 +41,102 @@ def read_schemas(df: DataFrame) -> str:
     )
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return plan_string(df).count("WholeStageCodegen")
+class ScaleViolations(NamedTuple):
+    """Offending nodes' simpleStrings per violation class (all three
+    empty = scale-safe)."""
+
+    windows: list[str]
+    sorts: list[str]
+    cartesian: list[str]
 
 
-def unpartitioned_windows(df: DataFrame) -> list[str]:
-    """Window nodes in the optimized logical plan with an EMPTY
-    partition spec over UNBOUNDED input — the "move every row to one
-    partition and sort it in one task" pattern (WindowExec's own
-    warning), a guaranteed straggler at scale.
+def _attr_ids(attrs) -> set[int]:
+    return {attrs.apply(i).exprId().id() for i in range(attrs.length())}
 
-    A window is exempt when its input subtree is provably row-bounded:
-    it contains a Limit, or a grouping-less Aggregate (1 row), or —
-    for multi-child nodes — every child is bounded.  Those windows
-    touch a driver-sized frame no matter the corpus size.  Returns the
-    offending nodes' simpleStrings (empty list = scale-safe).
+
+def _conjuncts(expr) -> list:
+    if expr.getClass().getSimpleName() == "And":
+        kids = expr.children()
+        return _conjuncts(kids.apply(0)) + _conjuncts(kids.apply(1))
+    return [expr]
+
+
+def _has_equi(node) -> bool:
+    """Mirror of Catalyst's ExtractEquiJoinKeys: the condition has
+    a TOP-LEVEL AND conjunct `l_expr = r_expr` where each side's
+    references fall entirely on one join side. An equality buried
+    under OR (x=y OR x<y) or a same-side equality (l.a = l.b) does
+    NOT make the join hash-partitionable (ADVICE r9)."""
+    cond = node.condition()
+    if cond.isEmpty():
+        return False
+    left = _attr_ids(node.left().output())
+    right = _attr_ids(node.right().output())
+    for c in _conjuncts(cond.get()):
+        if c.getClass().getSimpleName() not in (
+            "EqualTo",
+            "EqualNullSafe",
+        ):
+            continue
+        kids = c.children()
+        a = _attr_ids(kids.apply(0).references().toSeq())
+        b = _attr_ids(kids.apply(1).references().toSeq())
+        if not a or not b:
+            continue  # literal comparand — a filter, not a key
+        if (a <= left and b <= right) or (a <= right and b <= left):
+            return True
+    return False
+
+
+def scale_violations(df: DataFrame) -> ScaleViolations:
+    """The three scale-killer classes in the optimized logical plan,
+    found in one walk:
+
+    - ``windows``: Window nodes with an EMPTY partition spec over
+      unbounded input — the "move every row to one partition and sort
+      it in one task" pattern (WindowExec's own warning), a guaranteed
+      straggler at scale.
+    - ``sorts``: global Sort nodes that MATERIALIZE a total order of
+      unbounded input (VERDICT r7 #6) — a full range-exchange + total
+      sort whose only effect, in a pipeline, is burning a shuffle to
+      impose an order the next operator doesn't preserve anyway.  A
+      sort under a Limit is fine: the physical planner rewrites
+      ``Limit(Sort)`` (and ``Limit(Project(Sort))``) to
+      TakeOrderedAndProject — per-task top-k heaps merged on the
+      driver, no total sort ever runs.
+    - ``cartesian``: Join nodes that can only plan as CartesianProduct
+      or BroadcastNestedLoopJoin over UNBOUNDED inputs (VERDICT r8
+      #6).  A join is hash-partitionable (SortMergeJoin /
+      ShuffledHashJoin / BroadcastHashJoin) iff its condition carries
+      at least one equality predicate; without one, Spark must either
+      broadcast a whole side into a nested loop or materialize the
+      full cross product.  That is fine exactly when SOME side is
+      bounded (the broadcast-of-scalar pattern: crossJoin against a
+      grouping-less aggregate or a literal relation); where NEITHER
+      side is, it is O(|L|·|R|) work at scale no matter what the
+      optimizer picks.
+
+    A subtree is provably row-bounded when it contains a Limit, or a
+    grouping-less Aggregate (1 row), or a literal/in-memory relation,
+    or — for multi-child nodes — every child is bounded.  Windows and
+    sorts over a bounded subtree touch a driver-sized frame no matter
+    the corpus size, so they are exempt.
     """
-    out: list[str] = []
+    out = ScaleViolations([], [], [])
 
-    def walk(node) -> bool:
-        kids = node.children()
-        n = kids.length()
-        child_bounded = [walk(kids.apply(i)) for i in range(n)]
-        bounded = bool(child_bounded) and all(child_bounded)
+    def walk(node, under_limit: bool) -> bool:
         name = node.getClass().getSimpleName()
-        if name in ("GlobalLimit", "LocalLimit"):
+        is_limit = name in ("GlobalLimit", "LocalLimit")
+        # Limit(Sort) / Limit(Project(Sort)) become
+        # TakeOrderedAndProject (SpecialLimits strategy) — propagate
+        # the limit context through exactly the shapes it matches
+        child_under = is_limit or (under_limit and name == "Project")
+        kids = node.children()
+        child_bounded = [
+            walk(kids.apply(i), child_under) for i in range(kids.length())
+        ]
+        bounded = bool(child_bounded) and all(child_bounded)
+        if is_limit:
             bounded = True
         elif name == "Aggregate" and node.groupingExpressions().isEmpty():
             bounded = True
@@ -84,135 +148,16 @@ def unpartitioned_windows(df: DataFrame) -> list[str]:
             # have OOMed the driver before reaching the plan)
             bounded = True
         elif name == "Window" and node.partitionSpec().isEmpty() and not bounded:
-            out.append(node.simpleString(120))
-        return bounded
-
-    walk(df._jdf.queryExecution().optimizedPlan())
-    return out
-
-
-def unbounded_cartesian_joins(df: DataFrame) -> list[str]:
-    """Join nodes in the optimized logical plan that can only plan as
-    CartesianProduct or BroadcastNestedLoopJoin over UNBOUNDED inputs —
-    the third scale-killer class in this gate family (VERDICT r8 #6).
-
-    A join is hash-partitionable (SortMergeJoin / ShuffledHashJoin /
-    BroadcastHashJoin) iff its condition carries at least one equality
-    predicate; without one, Spark must either broadcast a whole side
-    into a nested loop or materialize the full cross product. That is
-    fine exactly when SOME side is provably row-bounded (the
-    broadcast-of-scalar pattern: crossJoin against a grouping-less
-    aggregate or a literal relation — driver-sized whatever the
-    corpus). An equality-free join where NEITHER side is bounded is
-    O(|L|·|R|) work at scale no matter what the optimizer picks.
-    Boundedness rules match `unpartitioned_windows`. Returns the
-    offending nodes' simpleStrings (empty list = scale-safe).
-    """
-    out: list[str] = []
-
-    def attr_ids(attrs) -> set[int]:
-        return {
-            attrs.apply(i).exprId().id() for i in range(attrs.length())
-        }
-
-    def conjuncts(expr) -> list:
-        if expr.getClass().getSimpleName() == "And":
-            kids = expr.children()
-            return conjuncts(kids.apply(0)) + conjuncts(kids.apply(1))
-        return [expr]
-
-    def has_equi(node) -> bool:
-        """Mirror of Catalyst's ExtractEquiJoinKeys: the condition has
-        a TOP-LEVEL AND conjunct `l_expr = r_expr` where each side's
-        references fall entirely on one join side. An equality buried
-        under OR (x=y OR x<y) or a same-side equality (l.a = l.b) does
-        NOT make the join hash-partitionable (ADVICE r9)."""
-        cond = node.condition()
-        if cond.isEmpty():
-            return False
-        left = attr_ids(node.left().output())
-        right = attr_ids(node.right().output())
-        for c in conjuncts(cond.get()):
-            if c.getClass().getSimpleName() not in (
-                "EqualTo",
-                "EqualNullSafe",
-            ):
-                continue
-            kids = c.children()
-            a = attr_ids(kids.apply(0).references().toSeq())
-            b = attr_ids(kids.apply(1).references().toSeq())
-            if not a or not b:
-                continue  # literal comparand — a filter, not a key
-            if (a <= left and b <= right) or (a <= right and b <= left):
-                return True
-        return False
-
-    def walk(node) -> bool:
-        kids = node.children()
-        n = kids.length()
-        child_bounded = [walk(kids.apply(i)) for i in range(n)]
-        bounded = bool(child_bounded) and all(child_bounded)
-        name = node.getClass().getSimpleName()
-        if name in ("GlobalLimit", "LocalLimit"):
-            bounded = True
-        elif name == "Aggregate" and node.groupingExpressions().isEmpty():
-            bounded = True
-        elif name in ("LocalRelation", "OneRowRelation", "LogicalRDD"):
-            bounded = True
-        elif name == "Join":
-            if not has_equi(node) and not any(child_bounded):
-                out.append(node.simpleString(120))
-        return bounded
-
-    walk(df._jdf.queryExecution().optimizedPlan())
-    return out
-
-
-def unbounded_global_sorts(df: DataFrame) -> list[str]:
-    """Global Sort nodes in the optimized logical plan that MATERIALIZE
-    a total order of unbounded input — the sibling scale-killer of the
-    unpartitioned window (VERDICT r7 #6).
-
-    A global sort under a Limit is fine: the physical planner rewrites
-    ``Limit(Sort)`` (and ``Limit(Project(Sort))``) to
-    TakeOrderedAndProject — per-task top-k heaps merged on the driver,
-    no total sort ever runs.  A sort over a provably row-bounded
-    subtree (Limit below, grouping-less Aggregate, literal relation —
-    same rules as `unpartitioned_windows`) is driver-sized whatever
-    the corpus.  Everything else is a full range-exchange + total sort
-    whose only effect, in a pipeline, is burning a shuffle to impose
-    an order the next operator doesn't preserve anyway.  Returns the
-    offending nodes' simpleStrings (empty list = scale-safe).
-    """
-    out: list[str] = []
-
-    def walk(node, under_limit: bool) -> bool:
-        name = node.getClass().getSimpleName()
-        # Limit(Sort) / Limit(Project(Sort)) become
-        # TakeOrderedAndProject (SpecialLimits strategy) — propagate
-        # the limit context through exactly the shapes it matches
-        child_under = name in ("GlobalLimit", "LocalLimit") or (
-            under_limit and name == "Project"
-        )
-        kids = node.children()
-        n = kids.length()
-        child_bounded = [
-            walk(kids.apply(i), child_under) for i in range(n)
-        ]
-        bounded = bool(child_bounded) and all(child_bounded)
-        if name in ("GlobalLimit", "LocalLimit"):
-            bounded = True
-        elif name == "Aggregate" and node.groupingExpressions().isEmpty():
-            bounded = True
-        elif name in ("LocalRelation", "OneRowRelation", "LogicalRDD"):
-            bounded = True
+            out.windows.append(node.simpleString(120))
         elif (
             name == "Sort"
             and getattr(node, "global")()
             and not bounded
             and not under_limit
         ):
-            out.append(node.simpleString(120))
+            out.sorts.append(node.simpleString(120))
+        elif name == "Join" and not any(child_bounded) and not _has_equi(node):
+            out.cartesian.append(node.simpleString(120))
         return bounded
 
     walk(df._jdf.queryExecution().optimizedPlan(), False)

@@ -49,17 +49,11 @@ def test_shuffle_shards_deterministic_total_and_balanced(spark):
 
 
 def test_shuffle_shards_plan_has_no_global_sort(spark):
-    from data_engineering_spark.plans.explain import (
-        unbounded_cartesian_joins,
-        unbounded_global_sorts,
-        unpartitioned_windows,
-    )
+    from data_engineering_spark.plans.explain import scale_violations
 
     d = load_table(spark, SF, "documents")
-    out = shuffle_shards(d, 8)
-    assert not unbounded_global_sorts(out)
-    assert not unpartitioned_windows(out)
-    assert not unbounded_cartesian_joins(out)
+    found = scale_violations(shuffle_shards(d, 8))
+    assert not any(found), found
 
 
 def test_shuffle_shards_rejects_bad_counts(spark):

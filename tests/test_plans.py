@@ -5,7 +5,6 @@ scale — concretely')."""
 from __future__ import annotations
 
 from data_engineering_spark.plans.explain import (
-    codegen_stage_count,
     plan_string,
     pushed_filters,
     read_schemas,
@@ -50,65 +49,6 @@ def test_keep_last_is_single_shuffle_window(spark):
     # one window over one exchange — no global sort of the whole table
     assert plan.count("Exchange") <= 2, plan
     assert "Window" in plan
-
-
-PYTHON_EVAL_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas")
-
-
-def test_no_python_in_relational_hot_path(spark):
-    """Relational/CDC/dedup/similarity queries must be pure JVM plans —
-    Python (even Arrow-vectorized) only appears in the explicitly
-    multimodal UDF queries."""
-    ARROW_BATCH_OK = {
-        # mapInPandas is the point there (documented Arrow-batch ops)
-        "q_multimodal_histogram",
-        "q_multimodal_frame_sample",
-        "q_multimodal_decode",
-        # exact GEMM similarity join: BLAS matmul beats carrying vectors
-        # through a pair join (see operators/similarity.py)
-        "q_embedding_similarity_join",
-        # SemDeDup: per-bucket GEMM via applyInPandas, same rationale
-        "q_embedding_semdedup",
-        # LSH bucket assignment is a sign-GEMM over Arrow batches
-        "q_embedding_lsh_join",
-        # incremental probe reuses the same banding + bucket GEMM
-        "q_embedding_incremental_neardup",
-        # the prebuilt-index serving twins run the same Arrow ADC scorers
-        "q_embedding_pq_serving",
-        "q_embedding_ivfpq_refine_serving",
-        # IVF probes are assigned driver-side/numpy by design; since r5
-        # the deterministic-quantizer corpus assignment is the
-        # broadcast-GEMM mapInPandas (both variants)
-        "q_embedding_ivf_topk",
-        "q_embedding_ivf_topk_sq8",
-        # WAV decode is an Arrow-batched binary parser (mapInPandas) —
-        # the payload build around it stays JVM
-        "q_multimodal_wav",
-        # framed-FFT features are numpy by nature (same slot)
-        "q_multimodal_audio_features",
-        # Misra-Gries candidate pass is a per-partition bounded-counter
-        # scan (mapInPandas) — the exact-count phase stays JVM
-        "q_doc_heavy_hitter_terms",
-        # perceptual dHash decodes pixels in Arrow batches; the banded
-        # near-dup join over the 64-bit hashes stays JVM
-        "q_multimodal_dhash_neardup",
-        # PCA's Gram partials are an Arrow batch pass at FIT time; the
-        # projection itself is pure codegen
-        "q_embedding_pca_project",
-        # PQ encode/ADC scoring are numpy-over-Arrow by design (code
-        # argmin + LUT gathers have no builtin-expression equivalent)
-        "q_embedding_pq_topk",
-        "q_embedding_ivf_pq_topk",
-        # refine variant: same ADC mapInPandas candidate pass; the
-        # exact re-rank stage itself is pure JVM
-        "q_embedding_ivfpq_refine_topk",
-    }
-    for name, fn in QUERIES.items():
-        if name in ARROW_BATCH_OK:
-            continue
-        plan = plan_string(fn(spark, SF))
-        for node in PYTHON_EVAL_NODES:
-            assert node not in plan, f"{name} contains {node}"
 
 
 def test_round2_operators_plan_shapes(spark):

@@ -8,6 +8,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_engineering_spark.plans.explain import plan_string  # noqa: E402
 from data_engineering_spark.queries import QUERIES  # noqa: E402
 from data_engineering_spark.session import get_session  # noqa: E402
 
@@ -23,10 +24,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_session(app_name="capture-plans")
     for name in names:
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_string(QUERIES[name](spark, sf_dir))
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
         ex = plan.count("Exchange")
