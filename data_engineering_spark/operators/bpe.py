@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_engineering_spark.operators.text import tokens
+from data_engineering_spark.types.frames import local_frame
 
 _ASCII_WORD = "^[!-~]+$"
 
@@ -483,8 +484,8 @@ def bpe_encode_ids(
         "word",
         F.posexplode_outer("bpe_tokens").alias("tpos", "__tok"),
     )
-    vocab_df = spark.createDataFrame(
-        bpe_vocab_ids(merges), "__tok string, __tid int"
+    vocab_df = local_frame(
+        spark, bpe_vocab_ids(merges), "__tok string, __tid int"
     )
     word_ids = enc.join(F.broadcast(vocab_df), "__tok", "left").select(
         "word",

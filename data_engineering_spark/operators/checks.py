@@ -47,6 +47,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_spark.types.frames import local_frame
+
 
 @dataclass(frozen=True)
 class Constraint:
@@ -242,7 +244,8 @@ def schema_contract_check(
                 rows.append(
                     (name, "unexpected", None, actual[name].simpleString())
                 )
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         rows,
         "column string, violation string, expected string, actual string",
     )

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_engineering_spark.operators.materialize import CacheScope, attach
+from data_engineering_spark.types.frames import local_frame
 
 
 def assign_sequential_ids(
@@ -68,8 +69,8 @@ def assign_sequential_ids(
         offsets[pid] = acc
         acc += counts[pid]
     spark = df.sparkSession
-    off = spark.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "__pid int, __off long"
+    off = local_frame(
+        spark, [(p, o) for p, o in offsets.items()], "__pid int, __off long"
     )
     w = Window.partitionBy("__pid").orderBy(*cols)
     out = (

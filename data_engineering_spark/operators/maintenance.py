@@ -26,6 +26,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
 
+from data_engineering_spark.types.frames import local_frame
+
 TARGET_FILE_BYTES = 512 * 1024 * 1024  # reference :132
 
 
@@ -172,7 +174,8 @@ def lake_inventory(spark: SparkSession, root: str):
                 ",".join(parts) if parts else None,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "table string, n_files long, total_bytes long, "
         "mean_file_bytes long, n_columns int, partition_cols string",

@@ -45,6 +45,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineering_spark.types.frames import local_frame
+
 UPSERT_OPS = ("c", "u", "r")
 DELETE_OP = "d"
 
@@ -650,7 +652,7 @@ class MergeTable:
 
             with open(self._schema_path) as f:
                 stored = StructType.fromJson(json.load(f))
-            df = self.spark.createDataFrame([], stored)
+            df = local_frame(self.spark, [], stored)
         return self._apply_colmap(df)
 
     def read(self) -> DataFrame:

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_engineering_spark.operators.similarity import as_double_vec
+from data_engineering_spark.types.frames import local_frame
 
 
 def _lloyd(X, k: int, iters: int, rng):
@@ -172,9 +173,7 @@ def codebook_frame(spark, cb) -> DataFrame:
         for sub in range(cb.shape[0])
         for j in range(cb.shape[1])
     ]
-    frame = spark.createDataFrame(
-        rows, "m int, code int, centroid array<double>"
-    )
+    frame = local_frame(spark, rows, "m int, code int, centroid array<double>")
     # the tensor is already driver-local — pin it on the frame so
     # same-run consumers (_codebook_matrix) skip the Spark round-trip
     # re-collect of rows this process just created (each such collect
@@ -320,7 +319,8 @@ def pq_topk(
             "corpus-scale sides use the block-grid similarity join."
         )
     if not len(qpdf):
-        return encoded.sparkSession.createDataFrame(
+        return local_frame(
+            encoded.sparkSession,
             [], f"{query_id_col} long, rank int, neighbor_id long, cosine_r double"
         )
     Q = np.stack(qpdf["__qv"].to_numpy())
@@ -523,7 +523,8 @@ def ivf_pq_topk(
             f"{max_query_rows}; see pq_topk's contract note."
         )
     if not len(qpdf):
-        return encoded.sparkSession.createDataFrame(
+        return local_frame(
+            encoded.sparkSession,
             [],
             f"{query_id_col} long, rank int, neighbor_id long, "
             "cosine_r double",
@@ -612,7 +613,8 @@ def ivf_pq_topk(
     # RAW query vectors (not the unit-normalized Qu): cosine()
     # normalizes internally, and the raw form keeps the expression
     # tree identical to the DuckDB oracle's dot/(|q|·|v|)
-    qvec_df = spark.createDataFrame(
+    qvec_df = local_frame(
+        spark,
         [
             (int(qid), [float(x) for x in qv])
             for qid, qv in zip(qids, Q)

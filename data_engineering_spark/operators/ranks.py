@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_engineering_spark.types.frames import local_frame
+
 
 def exact_global_rank(
     df: DataFrame,
@@ -93,7 +95,7 @@ def exact_global_rank(
     for pid, c in counts:
         offsets.append((pid, acc))
         acc += c
-    off_df = spark.createDataFrame(offsets, "__pid int, __off long")
+    off_df = local_frame(spark, offsets, "__pid int, __off long")
     w = Window.partitionBy("__pid").orderBy(value_col, id_col)
     ranked = (
         e2.withColumn("__lr", F.row_number().over(w).cast("long"))

@@ -23,6 +23,7 @@ from data_engineering_spark.operators.sketches import (
     HASH_SPACE,
     uniform_hash60,
 )
+from data_engineering_spark.types.frames import local_frame
 
 
 def bernoulli_sample(
@@ -69,7 +70,8 @@ def mixture_sample(
     Spark's double→long cast truncates while DuckDB's rounds, so the
     explicit floor is what keeps sample membership identical."""
     spark = df.sparkSession
-    tgt = spark.createDataFrame(
+    tgt = local_frame(
+        spark,
         [(k, float(v)) for k, v in targets.items()],
         f"{domain_col} string, __target double",
     )

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_engineering_spark.operators.materialize import CacheScope
+from data_engineering_spark.types.frames import local_frame
 
 
 def as_double_vec(col: Column | str) -> Column:
@@ -171,8 +172,8 @@ def cosine_similarity_join(
     """
     dim = vector_dim(vectors, vec_col)
     if dim is None:
-        return vectors.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine_r double"
+        return local_frame(
+            vectors.sparkSession, [], "id_a long, id_b long, cosine_r double"
         )
     u = with_unit_vector(vectors, vec_col)
 
@@ -383,7 +384,8 @@ def semdedup_pairs(
 
     dim = vector_dim(vectors, vec_col)
     if dim is None:
-        return vectors.sparkSession.createDataFrame(
+        return local_frame(
+            vectors.sparkSession,
             [], "id_a long, id_b long, bucket long, cosine_r double"
         )
 
@@ -666,7 +668,8 @@ def build_ivf_index(
         ).fit(feat_v)
         assigned = model.transform(feat_v).drop("__fv")
         centroids = np.stack([c for c in model.clusterCenters()])
-        centroids_df = spark.createDataFrame(
+        centroids_df = local_frame(
+            spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
             "cluster int, centroid array<double>",
         )
@@ -724,7 +727,8 @@ def ivf_topk_from_index(
     broadcast_probes = len(qpdf) <= driver_assign_limit
     if broadcast_probes:
         if not len(qpdf):
-            return queries.sparkSession.createDataFrame(
+            return local_frame(
+                queries.sparkSession,
                 [],
                 f"{query_id_col} long, rank int, neighbor_id long, "
                 "cosine_r double",
@@ -747,9 +751,7 @@ def ivf_topk_from_index(
             for i in range(len(qpdf))
             for c in np.argsort(d2[i], kind="stable")[:n_probe]
         ]
-        probes = queries.sparkSession.createDataFrame(
-            probe_rows, probe_schema
-        )
+        probes = local_frame(queries.sparkSession, probe_rows, probe_schema)
     else:
         probes = _assign_probes_distributed(
             qframe, centroids, n_probe, query_id_col, probe_schema
@@ -952,8 +954,8 @@ def lsh_bucketed_similarity_join(
         )
     dim = vector_dim(vectors, vec_col)
     if dim is None:
-        return vectors.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine_r double"
+        return local_frame(
+            vectors.sparkSession, [], "id_a long, id_b long, cosine_r double"
         )
     banded = _lsh_banded(
         vectors, id_col, vec_col, dim, num_bands, planes_per_band, seed
@@ -1204,7 +1206,8 @@ def embedding_lsh_index(
         )
     dim = vector_dim(vectors, vec_col)
     if dim is None:
-        return vectors.sparkSession.createDataFrame(
+        return local_frame(
+            vectors.sparkSession,
             [], "id long, band int, bucket int, __v array<double>"
         )
     return _lsh_banded(
@@ -1252,8 +1255,8 @@ def embedding_incremental_pairs(
         )
     dim = vector_dim(new_vecs, vec_col)
     if dim is None:
-        return new_vecs.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine_r double"
+        return local_frame(
+            new_vecs.sparkSession, [], "id_a long, id_b long, cosine_r double"
         )
     banded_new = _lsh_banded(
         new_vecs, id_col, vec_col, dim, num_bands, planes_per_band, seed

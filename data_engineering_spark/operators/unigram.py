@@ -60,6 +60,7 @@ from data_engineering_spark.operators.bpe import (
     bounded_vocabulary,
 )
 from data_engineering_spark.operators.text import tokens
+from data_engineering_spark.types.frames import local_frame
 
 UG_UNK = "[UNK]"
 UG_MAX_WORD_LEN = 32  # same cap + [UNK] convention as WordPiece
@@ -534,8 +535,8 @@ def unigram_encode_ids(
     ).select(
         "word", F.posexplode_outer("ug_tokens").alias("tpos", "__tok")
     )
-    vocab_df = spark.createDataFrame(
-        unigram_vocab_ids(piece_scores), "__tok string, __tid int"
+    vocab_df = local_frame(
+        spark, unigram_vocab_ids(piece_scores), "__tok string, __tid int"
     )
     word_ids = enc.join(F.broadcast(vocab_df), "__tok", "left").select(
         "word",

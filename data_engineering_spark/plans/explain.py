@@ -142,10 +142,11 @@ def scale_violations(df: DataFrame) -> ScaleViolations:
             bounded = True
         elif name in ("LocalRelation", "OneRowRelation", "LogicalRDD"):
             # literal/in-memory relations are driver-sized by
-            # construction (createDataFrame of collected metadata —
-            # Spark's Python createDataFrame plans as LogicalRDD when
-            # the conversion takes the RDD path; data any larger would
-            # have OOMed the driver before reaching the plan)
+            # construction: the package's driver-built frames
+            # (types.frames.local_frame) plan as LocalRelation, and a
+            # createDataFrame of a Python list outside the package
+            # plans as LogicalRDD; data any larger would have OOMed
+            # the driver before reaching the plan
             bounded = True
         elif name == "Window" and node.partitionSpec().isEmpty() and not bounded:
             out.windows.append(node.simpleString(120))

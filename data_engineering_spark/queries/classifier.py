@@ -18,6 +18,7 @@ from data_engineering_spark.operators.classifier import (
     synthetic_weights,
 )
 from data_engineering_spark.registry import query
+from data_engineering_spark.types.frames import local_frame
 
 _LMB = 8192  # LM bucket count (matches train_bigram_lm default)
 
@@ -239,9 +240,7 @@ def _lm_logq(spark: SparkSession, sf_dir: str) -> DataFrame:
             FX.write_lm_logq_fixture(rows, n)
         except Exception as e:
             FX.warn_fixture_write_failed("write_lm_logq_fixture", e)
-    return spark.createDataFrame(
-        rows, "bucket long, q12 long, q1 long"
-    )
+    return local_frame(spark, rows, "bucket long, q12 long, q1 long")
 
 
 @query("q_doc_lm_perplexity", oracle=_lm_logq_oracle())
@@ -687,8 +686,11 @@ def q_doc_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that aggregate, the documented q_doc_source_budget exemption)
     # and re-literalize, so the returned plan carries a LocalRelation
     # instead of duplicating the whole demands+water-fill subtree in
-    # both consumers below
-    alloc = spark.createDataFrame(
+    # both consumers below (a LocalRelation because local_frame hands
+    # the rows to the JVM as Arrow; a Python-list createDataFrame would
+    # plan a pickled-RDD LogicalRDD here)
+    alloc = local_frame(
+        spark,
         water_fill(demands, "source", "demand", budget=10_000)
         .collect(),
         "source string, demand long, alloc double",

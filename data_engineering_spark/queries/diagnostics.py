@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from data_engineering_spark.catalog import load_table
 from data_engineering_spark.registry import query
+from data_engineering_spark.types.frames import local_frame
 
 
 @query(
@@ -418,9 +419,7 @@ def q_dayn_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     first = du.groupBy("user_id").agg(F.min("day").alias("d0"))
     n = first.agg(F.count(F.lit(1)).alias("cohort"))
-    horizons = spark.createDataFrame(
-        [(1,), (3,), (7,), (14,)], "n int"
-    )
+    horizons = local_frame(spark, [(1,), (3,), (7,), (14,)], "n int")
     j = first.join(du, "user_id").join(F.broadcast(horizons))
     hit = F.when(
         F.col("day") == F.date_add(F.col("d0"), F.col("n")),

@@ -21,6 +21,7 @@ from data_engineering_spark.operators.checks import (
     unique,
 )
 from data_engineering_spark.registry import query
+from data_engineering_spark.types.frames import local_frame
 
 
 @query(
@@ -176,7 +177,7 @@ def q_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     idx = assign_sequential_ids(d, ["doc_id"], id_col="seq")
     n = idx.agg(F.count(F.lit(1)).alias("n"))
-    slots = spark.createDataFrame([(1,), (2,)], "j int")
+    slots = local_frame(spark, [(1,), (2,)], "j int")
     probes = (
         idx.select("doc_id")
         .join(F.broadcast(slots))

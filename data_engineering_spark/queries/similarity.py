@@ -18,6 +18,7 @@ from data_engineering_spark.operators.similarity import (
     lsh_bucketed_similarity_join,
 )
 from data_engineering_spark.registry import query
+from data_engineering_spark.types.frames import local_frame
 
 _TOPK_QUERIES = 8  # vec_id < 8 are the standing query vectors
 _K = 5
@@ -156,7 +157,8 @@ def _ivf_centroids_spark(
         FX.write_ivf_fixture(cents, n)
     except Exception as e:
         FX.warn_fixture_write_failed("write_ivf_fixture", e)
-    frame = spark.createDataFrame(
+    frame = local_frame(
+        spark,
         [(i, [float(v) for v in cents[i]]) for i in range(len(cents))],
         "cluster int, centroid array<double>",
     )

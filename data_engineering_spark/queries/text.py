@@ -19,6 +19,7 @@ from data_engineering_spark.operators.dedup import (
     fingerprint_store,
 )
 from data_engineering_spark.registry import query
+from data_engineering_spark.types.frames import local_frame
 
 _EN_STOP = ("the", "a", "of", "and", "to")
 
@@ -848,9 +849,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .alias("cum"),
     )
-    thr = spark.createDataFrame(
-        [(0.5,), (0.9,), (0.99,)], "thr double"
-    )
+    thr = local_frame(spark, [(0.5,), (0.9,), (0.99,)], "thr double")
     return (
         r.join(F.broadcast(thr))
         .join(F.broadcast(tot))

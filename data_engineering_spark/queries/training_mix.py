@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from data_engineering_spark.catalog import load_table
 from data_engineering_spark.registry import query
+from data_engineering_spark.types.frames import local_frame
 
 _MIX_BUDGET = 5_000  # token budget for the mix stage: below the
 # curated corpus's demand at every test sf, so water-fill rationing
@@ -403,7 +404,8 @@ def q_corpus_training_mix(
             .alias("n_tokens"),
         )
     )
-    spine = spark.createDataFrame(
+    spine = local_frame(
+        spark,
         [(seq, name) for seq, name, _ in stage_sets],
         "seq int, stage string",
     )

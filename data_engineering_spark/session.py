@@ -12,6 +12,8 @@ cluster scale:
   SURVEY.md §2.8 F4-F7) is deterministic across driver/executors/oracles.
 - `spark.sql.shuffle.partitions` sized from the env, not the 200 default;
   AQE coalesces down from there at runtime.
+- Driver heap from `SPARK_GRAFT_DRIVER_MEM`, else three quarters of the
+  host's physical memory, capped at 16g.
 
 On a real cluster the same builder is used — only master/executor settings
 differ, supplied via spark-submit, never hardcoded here.
@@ -24,6 +26,24 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+
+
+def driver_memory(physical_bytes: int | None) -> str:
+    """Default driver heap for a host with `physical_bytes` of memory:
+    three quarters of it, capped at 16g — the JVM, Python workers and
+    the OS page cache share the rest. 16g when the size is unknown."""
+    if not physical_bytes:
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    return f"{min(MAX_DRIVER_MEMORY_MB, physical_bytes * 3 // 4 // 2**20)}m"
+
+
+def _physical_memory() -> int | None:
+    """Physical memory of this host in bytes (MemTotal), or None."""
+    try:
+        return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError):
+        return None
 
 
 def default_configs(shuffle_partitions: int | None = None) -> dict[str, str]:
@@ -38,12 +58,12 @@ def default_configs(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.sql.shuffle.partitions": str(sp),
         # --- heap: in local mode the driver JVM hosts every executor
         #     thread, so the 1g default starves 32 concurrent tasks
-        #     (parquet writers scale row groups down, GC dominates).
+        #     (parquet writers scale row groups down, GC dominates);
+        #     sized from physical memory so it fits the host.
         #     Honored only at JVM launch; under spark-submit the
         #     submitted --driver-memory wins ---
-        "spark.driver.memory": os.environ.get(
-            "SPARK_GRAFT_DRIVER_MEM", "16g"
-        ),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or driver_memory(_physical_memory()),
         # --- scan sizing: 128 MB splits keep partitions memory-friendly ---
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         # --- Arrow for pandas interchange (extension operators only) ---

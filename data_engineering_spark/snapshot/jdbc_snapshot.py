@@ -9,6 +9,10 @@ Parity with /root/reference/sanpshot_script.py (S2-S4, K3, K5):
   ``partitionColumn/lowerBound/upperBound/numPartitions`` (:117-129).
 - Post-read: sanitize names, boolean→int compat cast, stamp system
   columns, repartition for write parallelism, append + audit-log row.
+- One pass over the source: the appended row count is observed on the
+  write itself, and the one-row audit record is a driver-local Arrow
+  frame, so a snapshot runs three jobs (bounds probe, append, audit
+  row) and starts no Python worker.
 
 No MySQL in the test environment: the SQL builders and the post-read
 transform are unit-tested; `read_table` only *builds* the reader.
@@ -23,13 +27,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_spark.types.casts import (
     compat_cast_booleans,
     sanitize_columns,
 )
+from data_engineering_spark.types.frames import local_frame
 
 
 @dataclass
@@ -178,13 +183,22 @@ def prepare_snapshot_frame(
 
 def append_snapshot(
     df: DataFrame, dest_path: str, write_partitions: int | None = None
-) -> None:
-    """Append to the lake. `write_partitions` only when the natural
-    parallelism is wrong (reference hardcodes repartition(500), :233 —
-    at local scale that's 500 tiny files; default leaves AQE in charge)."""
+) -> int:
+    """Append to the lake and return the number of rows appended.
+    `write_partitions` only when the natural parallelism is wrong
+    (reference hardcodes repartition(500), :233 — at local scale that's
+    500 tiny files; default leaves AQE in charge).
+
+    The count rides the write: ``count(1)`` is observed on the exact
+    frame the writer consumes, so the source is scanned once and the
+    count is the rows actually written."""
     if write_partitions:
         df = df.repartition(write_partitions)
-    df.write.mode("append").parquet(dest_path)
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "append"
+    ).parquet(dest_path)
+    return obs.get["rows"]
 
 
 def audit_log_sql(rds_id: int, database: str, table: str, sink: str) -> str:
@@ -211,8 +225,10 @@ def record_audit(
     either way."""
     import posixpath
 
-    row = spark.createDataFrame(
-        [(database, table, sink)], "schema string, name string, tableName string"
+    row = local_frame(
+        spark,
+        [(database, table, sink)],
+        "schema string, name string, tableName string",
     )
     row.coalesce(1).write.mode("append").parquet(
         posixpath.join(lake_root, f"insert_log{rds_id}")
@@ -312,21 +328,22 @@ def snapshot_table(
 
     df = reader.load()
     prepared = prepare_snapshot_frame(df, tenant_id=tenant_id, rds_id=rds_id)
-    # persist so the source is scanned exactly once: the old
-    # isEmpty-probe + write + count-after-write pattern hit the JDBC
-    # source three times, and the final count could disagree with the
-    # rows actually appended if the source changed between scans
-    prepared.persist()
-    try:
-        n = prepared.count()
-        if n == 0:
-            return 0
-        dest = posixpath.join(lake_root, database, table)
-        append_snapshot(prepared, dest, write_partitions)
-        record_audit(spark, lake_root, rds_id, database, table, dest)
-        return n
-    finally:
-        prepared.unpersist()
+    dest = posixpath.join(lake_root, database, table)
+    # through Hadoop FS, not os.path: the lake root may be s3a://
+    dest_path = spark._jvm.org.apache.hadoop.fs.Path(dest)
+    fs = dest_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    existed = fs.exists(dest_path)
+    # write first, count on the way: one scan of the source. An empty
+    # append still writes a directory holding one zero-row part file,
+    # so an empty source deletes the destination it created — no lake
+    # table and no audit row for a table with no rows.
+    n = append_snapshot(prepared, dest, write_partitions)
+    if n == 0:
+        if not existed:
+            fs.delete(dest_path, True)
+        return 0
+    record_audit(spark, lake_root, rds_id, database, table, dest)
+    return n
 
 
 def run_snapshot(

@@ -31,6 +31,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from data_engineering_spark.types.frames import local_frame
+
 
 @dataclass(frozen=True)
 class FileInfo:
@@ -125,7 +127,8 @@ class FileLedger:
             return
         if batch_id is None:
             batch_id = self.next_batch_id()
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark,
             [(f.path, f.size, f.mtime_ms, batch_id) for f in files],
             "path string, size long, mtime_ms long, batch_id long",
         )

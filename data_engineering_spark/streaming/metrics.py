@@ -27,6 +27,8 @@ from collections import deque
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from data_engineering_spark.types.frames import local_frame
+
 METRICS_SCHEMA = (
     "query_id string, run_id string, batch_id long, ts string, "
     "num_input_rows long, input_rows_per_second double, "
@@ -81,7 +83,7 @@ def attach_metrics(
 
 def metrics_frame(spark: SparkSession, m: StreamMetrics) -> DataFrame:
     """Snapshot the buffered batch history as a DataFrame."""
-    return spark.createDataFrame(list(m.progress), METRICS_SCHEMA)
+    return local_frame(spark, m.progress, METRICS_SCHEMA)
 
 
 def read_checkpoint_offsets(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
@@ -139,6 +141,6 @@ def read_checkpoint_offsets(spark: SparkSession, checkpoint_dir: str) -> DataFra
         rows.append(
             (batch_id, batch_id in commits, json.dumps(payload))
         )
-    return spark.createDataFrame(
-        rows, "batch_id long, committed boolean, offset_json string"
+    return local_frame(
+        spark, rows, "batch_id long, committed boolean, offset_json string"
     )

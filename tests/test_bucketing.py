@@ -74,3 +74,14 @@ def test_session_config_builders():
     s3 = s3_configs("http://minio:9000", "ak", "sk")
     assert s3["spark.hadoop.fs.s3a.endpoint"] == "http://minio:9000"
     assert s3["spark.hadoop.fs.s3a.path.style.access"] == "true"
+
+
+def test_driver_memory_fits_the_host():
+    from data_engineering_spark.session import driver_memory
+
+    gib = 2**30
+    assert driver_memory(15 * gib) == f"{15 * 1024 * 3 // 4}m"
+    assert driver_memory(4 * gib) == "3072m"
+    # capped on large hosts; the cap when the size is unknown
+    assert driver_memory(64 * gib) == "16384m"
+    assert driver_memory(None) == "16384m"

@@ -93,6 +93,41 @@ def test_snapshot_table_derby_end_to_end(spark, tmp_path):
     conn.commit()
 
 
+def test_snapshot_table_job_budget(spark, tmp_path):
+    """A keyed snapshot is three driver jobs: the bounds probe, the
+    append (which counts the rows it writes) and the audit row. A
+    persist-and-count pre-pass or a Python-parallelized audit row would
+    show up here as extra jobs."""
+    jvm = spark._jvm
+    conn = jvm.java.sql.DriverManager.getConnection(f"{URL};create=true")
+    st = conn.createStatement()
+    st.execute("CREATE TABLE budget (item_id BIGINT PRIMARY KEY, v INT)")
+    for i in range(1, 61):
+        st.execute(f"INSERT INTO budget VALUES ({i}, {i % 7})")
+    conn.commit()
+    cfg = JdbcConfig(
+        url=URL, user="", password="", driver=DRIVER, ident_quote=""
+    )
+    lake = str(tmp_path / "budget_lake")
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot_job_budget", "jobs-per-snapshot guard")
+    try:
+        n = snapshot_table(
+            spark, cfg, "APP", "budget", lake,
+            rds_id=7, tenant_id=3, num_partitions=4, key="item_id",
+        )
+        jobs = len(
+            sc.statusTracker().getJobIdsForGroup("snapshot_job_budget")
+        )
+    finally:
+        sc.setJobGroup(None, None)
+        st.execute("DROP TABLE budget")
+        conn.commit()
+    assert jobs <= 3, f"snapshot_table submitted {jobs} driver jobs"
+    assert n == 60
+    assert spark.read.parquet(os.path.join(lake, "APP", "budget")).count() == n
+
+
 def test_admin_cli_subcommands(spark, tmp_path, capsys):
     """python -m data_engineering_spark.admin: stats and inventory run
     against a real table; offsets against a real checkpoint."""
