@@ -8,7 +8,7 @@ entry points (cdc, snapshot). Subcommands:
 
 Each prints a small table to stdout; exit code 0 on success. All are
 metadata-dominated operations safe to run beside live pipelines
-(compact swaps atomically).
+(compact publishes a pointer table's result as one new version).
 """
 
 from __future__ import annotations

@@ -6,8 +6,11 @@ reference's known issues fixed:
 
 - the reference routes the WHOLE batch to the first ``__table`` value it
   sees (:396); we dispatch per distinct table (SURVEY.md §2.9).
-- keep-last dedup is a keyed window, not a pandas-on-Spark global sort
-  (operators/dedup.keep_last).
+- keep-last dedup is one algebraic max(struct) aggregate per key, not a
+  pandas-on-Spark global sort (operators/dedup.keep_last_agg): map-side
+  partial aggregation combines a hot key inside every input partition
+  before the shuffle, so a skewed tenant is map-parallel work instead
+  of one straggler task (SCALE.md "Skew").
 - schema/key discovery for the WHOLE batch is ONE grouped aggregate
   (envelope.batch_table_schemas) instead of the reference's two
   ``tail(1)`` full scans per table.
@@ -38,7 +41,7 @@ from data_engineering_spark.cdc.schema_evolution import (
     infer_partition_spec,
     partition_transform_column,
 )
-from data_engineering_spark.operators.dedup import keep_last, keep_last_agg
+from data_engineering_spark.operators.dedup import keep_last_agg
 from data_engineering_spark.operators.merge import (
     BUCKET_COL,
     MergeTable,
@@ -61,9 +64,9 @@ class LakeConfig:
     # message poisons the merge); disable for strict parity.
     quarantine: bool = True
     # Optimistic-commit retry around the keyed MERGE (reference
-    # :281-292: 10 attempts, 10 s apart). localCheckpoint staging in
-    # MergeTable relies on this loop to recover from executor/block
-    # loss mid-merge — the overwrite is idempotent, so a retry re-runs
+    # :281-292: 10 attempts, 10 s apart). A failed attempt publishes
+    # nothing (MergeTable commits by one pointer replace) and a MERGE
+    # of the same compacted batch is idempotent, so a retry re-runs
     # cleanly.
     merge_attempts: int = 10
     merge_retry_sleep_s: float = 10.0
@@ -93,20 +96,6 @@ class LakeConfig:
     # the per-batch driver-action constant is the CDC throughput
     # ceiling at high stream counts. 1 = serial (reference behavior).
     table_parallelism: int = 4
-    # LWW compaction strategy. "agg" (default) = algebraic
-    # max(struct(ts, offset, payload)): map-side partial aggregation
-    # combines a hot key inside every input partition before the
-    # shuffle, so a single tenant owning 10% of a batch becomes
-    # map-parallel work instead of one straggler window task (AQE
-    # splits skewed joins, NOT skewed windows). Measured on the
-    # 33%-hot-key 8M-row fixture: 3.3 s vs the window's 8.0 s cold,
-    # tied warm at local[32] — the default because its worst case is
-    # strictly better (SCALE.md "Skew"). "window" = row_number per key
-    # (one task per key — fine for organic key distributions). Same
-    # result whenever (__ts_ms, __offset) totally orders a key's rows;
-    # residual ties resolve by lexicographic payload max —
-    # deterministic either way.
-    lww: str = "agg"
     # Synthetic bucket count for keyed COW tables with NO inferred
     # partition column (Iceberg's bucket(N, key) hidden partition,
     # MergeTable.bucket_by). Without it an unpartitioned table pays a
@@ -279,7 +268,6 @@ class CdcEngine:
             tiebreak = (
                 ["__offset"] if "__offset" in slice_df.columns else []
             )
-            lww = keep_last_agg if self.config.lww == "agg" else keep_last
             # NULL message keys: groupBy puts all NULLs in ONE group,
             # so a producer that drops the key on a keyed table would
             # collapse every such record to the single latest row —
@@ -301,7 +289,7 @@ class CdcEngine:
                     ]
                 )
             )
-            slice_df = lww(
+            slice_df = keep_last_agg(
                 slice_df.withColumn(
                     "__lww_key",
                     F.coalesce(F.col("key"), payload_key),
@@ -363,18 +351,10 @@ class CdcEngine:
     ) -> None:
         if not keys:
             # keyless table → plain append (reference :275-276 INSERT path)
-            table = self.get_table(name, [])
             # NULL op is "not a delete" — a bare != would NULL-drop
-            inserts = stamped.filter(
-                F.coalesce(F.col("__op") != "d", F.lit(True))
+            self.get_table(name, []).append(
+                stamped.filter(F.coalesce(F.col("__op") != "d", F.lit(True)))
             )
-            if table.exists():
-                aligned = inserts.unionByName(
-                    table.read().limit(0), allowMissingColumns=True
-                )
-                aligned.write.mode("append").parquet(table.path)
-            else:
-                table.create(inserts)
             return
 
         # create-on-first-sight with inferred partition spec (reference
@@ -403,8 +383,7 @@ class CdcEngine:
         # here — the per-batch driver-job budget is test-guarded.
         table = self.get_table(name, merge_keys, partition_by=partition_col)
         # the reference wraps its MERGE in a 10-attempt optimistic retry
-        # (:281-292); this is also what makes the non-durable
-        # localCheckpoint staging in MergeTable safe under executor loss
+        # (:281-292)
         batch = stamped
         if isinstance(table, MergeTableMOR):
             # ts_guard is table-level for MOR (resolution order at read)

@@ -10,10 +10,18 @@ intent). On an Iceberg deployment these map to the Spark procedures:
     CALL catalog.system.expire_snapshots(table => t)
     CALL catalog.system.remove_orphan_files(table => t)
 
-For the parquet-core backend we implement the same outcomes directly:
-small-file compaction by rewrite (512 MB targets, matching the
-reference's write.target-file-size-bytes) and orphan cleanup of
-leftover staging/old directories from MergeTable's atomic swaps.
+For the parquet-core backend we implement the same outcomes directly.
+A MergeTable already expires snapshots itself: each commit deletes the
+version directories that neither it nor its predecessor names
+(operators/merge._commit_version). Here:
+
+- small-file compaction by rewrite (512 MB targets, matching the
+  reference's write.target-file-size-bytes). A pointer-committed table
+  is compacted into a new version through MergeTable's own commit; a
+  plain parquet directory is rewritten beside itself and swapped in.
+- orphan cleanup of a plain directory's crashed compaction leftovers.
+- inventory and footer statistics that see a pointer table's live
+  files only (merge.live_dirs), never the retained previous version.
 """
 
 from __future__ import annotations
@@ -26,6 +34,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
 
+from data_engineering_spark.operators.merge import (
+    live_dirs,
+    read_commit,
+    rewrite_live,
+)
 from data_engineering_spark.types.frames import local_frame
 
 TARGET_FILE_BYTES = 512 * 1024 * 1024  # reference :132
@@ -42,12 +55,21 @@ def iceberg_maintenance_sql(catalog: str, table: str) -> list[str]:
     ]
 
 
-def data_file_sizes(path: str) -> list[int]:
+def _data_files(path: str) -> list[str]:
+    """A table's parquet data files: a pointer table's live
+    directories only, else everything under the directory."""
+    roots = live_dirs(path)
     return [
-        os.path.getsize(f)
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"),
+        f
+        for root in (roots if roots is not None else [path])
+        for f in glob.glob(os.path.join(root, "**", "*.parquet"),
                            recursive=True)
+        if not os.path.basename(f).startswith(("_", "."))
     ]
+
+
+def data_file_sizes(path: str) -> list[int]:
+    return [os.path.getsize(f) for f in _data_files(path)]
 
 
 def compact_table(
@@ -61,8 +83,10 @@ def compact_table(
 
     A file is 'small' below threshold·target; compaction rewrites into
     ceil(total/target) files via coalesce (no shuffle — pure bin-packing
-    of existing partitions) and swaps atomically, exactly like
-    MergeTable.merge."""
+    of existing partitions). A pointer-committed table gets the result
+    as one new version (merge.rewrite_live — readers see the old or the
+    new version, never a mix); a plain directory is rewritten to a
+    sibling and swapped in with two renames."""
     sizes = data_file_sizes(path)
     if not sizes:
         return False
@@ -73,6 +97,9 @@ def compact_table(
     n_out = max(1, -(-total // target_file_bytes))  # ceil
     if n_out >= len(sizes):
         return False
+    if read_commit(path) is not None:
+        rewrite_live(spark, path, lambda df: df.coalesce(int(n_out)))
+        return True
 
     df = spark.read.parquet(path)
     # a hive-partitioned table must compact per partition, or the
@@ -86,10 +113,10 @@ def compact_table(
     if part_cols:
         w = w.partitionBy(*part_cols)
     w.parquet(staging)
-    old = f"{path}.old-{uuid.uuid4().hex}"
-    os.replace(path, old)
+    replaced = f"{staging}-replaced"
+    os.replace(path, replaced)
     shutil.move(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(replaced, ignore_errors=True)
     return True
 
 
@@ -110,27 +137,27 @@ def _partition_columns(path: str) -> list[str]:
 
 
 def remove_orphans(root: str, max_age_s: float = 3600.0) -> int:
-    """Delete leftover staging/old directories (crash debris from atomic
-    swaps) — the parquet analogue of remove_orphan_files. Returns count
-    removed.
+    """Delete the ``*.compact-*`` directories a crashed plain-directory
+    compaction left under ``root`` — the parquet analogue of
+    remove_orphan_files. Returns count removed. (A pointer table's own
+    leftovers are removed by its next commit.)
 
     ``max_age_s``: only directories whose mtime is older than this are
     touched — a scheduled orphan sweep must not delete the LIVE staging
-    directory of a concurrently running compact/merge (Iceberg's
+    directory of a concurrently running compaction (Iceberg's
     remove_orphan_files defaults to a 3-day cutoff for the same race)."""
     import time
 
     cutoff = time.time() - max_age_s
     removed = 0
-    for pattern in ("*.old-*", "*.compact-*", "*.staging-*"):
-        for d in glob.glob(os.path.join(root, pattern)):
-            try:
-                if os.path.getmtime(d) > cutoff:
-                    continue
-            except OSError:
+    for d in glob.glob(os.path.join(root, "*.compact-*")):
+        try:
+            if os.path.getmtime(d) > cutoff:
                 continue
-            shutil.rmtree(d, ignore_errors=True)
-            removed += 1
+        except OSError:
+            continue
+        shutil.rmtree(d, ignore_errors=True)
+        removed += 1
     return removed
 
 
@@ -146,12 +173,7 @@ def lake_inventory(spark: SparkSession, root: str):
         tdir = os.path.join(root, entry)
         if not os.path.isdir(tdir) or entry.startswith(("_", ".")):
             continue
-        files = [
-            p
-            for p in glob.glob(os.path.join(tdir, "**", "*.parquet"),
-                               recursive=True)
-            if not os.path.basename(p).startswith(("_", "."))
-        ]
+        files = _data_files(tdir)
         if not files:
             continue
         total = sum(os.path.getsize(p) for p in files)
@@ -219,7 +241,13 @@ def footer_stats(
         aggs = [F.count(F.lit(1)).alias("n_rows")]
         for c in cols:
             aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-        row = spark.read.parquet(path).agg(*aggs).collect()[0]
+        roots = live_dirs(path)
+        if roots is None:
+            df = spark.read.parquet(path)
+        else:
+            # basePath keeps a partitioned table's partition column
+            df = spark.read.option("basePath", path).parquet(*roots)
+        row = df.agg(*aggs).collect()[0]
         return row.asDict()
     finally:
         spark.conf.set("spark.sql.parquet.aggregatePushdown", prev_push)

@@ -30,13 +30,18 @@ same cost profile as Iceberg's copy-on-write MERGE. At 100 TB the win
 comes from partition pruning (only partitions present in the source
 batch are rewritten), which ``MergeTable.merge`` implements when the
 table is partitioned.
+
+Publishing: every ``MergeTable`` write (and the MOR base) is one commit
+— immutable version directories, then one pointer-file replace
+(``_commit_version``) — so readers see whole commits without a lock
+and a crash at any step leaves the previous commit readable.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
-import tempfile
 import threading
 import time
 import uuid
@@ -44,7 +49,9 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from data_engineering_spark.cdc.schema_evolution import reconcile_types
 from data_engineering_spark.types.frames import local_frame
 
 UPSERT_OPS = ("c", "u", "r")
@@ -53,9 +60,10 @@ DELETE_OP = "d"
 # Spark/Hive partition-directory escaping (ExternalCatalogUtils): these
 # chars plus all control chars are %XX-encoded in dir names; NULL
 # partition values map to the default-partition sentinel. Needed
-# whenever a directory name is RECONSTRUCTED from a value (stale-
-# partition cleanup) — a raw f"{col}={value}" misses the escaping and
-# silently targets a directory that does not exist.
+# whenever a directory name is RECONSTRUCTED from a value (dropping a
+# merge's affected partitions from the live set) — a raw
+# f"{col}={value}" misses the escaping and silently keeps a stale
+# partition live.
 _PART_ESCAPE = set('"#%\'*/:=?\\\x7f{[]^')
 _NULL_PART_DIR = "__HIVE_DEFAULT_PARTITION__"
 
@@ -134,8 +142,6 @@ def merge_frames(
     (or worse, corrupt) on it; an unpromotable change raises naming
     the column.
     """
-    from data_engineering_spark.cdc.schema_evolution import reconcile_types
-
     widened = reconcile_types(source.schema, target.schema)
     for c, dt in widened.items():
         source = source.withColumn(c, F.col(c).cast(dt))
@@ -213,49 +219,6 @@ def _has_data_files(path: str) -> bool:
             if meta.num_rows > 0:
                 return True
     return False
-
-
-def _recover_swap(path: str, read_only: bool = False) -> None:
-    """Self-heal the two-rename swap's crash window.
-
-    The atomic swap is `rename(path, old); rename(staging, path);
-    rmtree(old)`. A crash between the renames leaves NO table at
-    `path` — the data is intact in the single `.old-*` dir; restore
-    it (any staging dir is an unpublished partial write, garbage). A
-    crash after the second rename leaves a stale `.old-*` (and the
-    next op's staging) — both garbage once `path` exists. Runs under
-    the table's path lock at every write-op entry, so each op starts
-    from a healed directory and at most one `.old-*` can ever exist;
-    more than one means external interference and recovery refuses to
-    guess.
-
-    ``read_only=True`` (the read-path self-heal) restores the single
-    `.old-*` if the table is missing but deletes NOTHING: the path
-    lock is process-local, so a reader in another process that
-    observes a live writer's two-rename window must not rmtree that
-    writer's in-flight `.staging-*` (or race its `.old-*` cleanup) —
-    garbage collection belongs to write-op entry, which does hold the
-    writer's lock.
-    """
-    import glob as _glob
-
-    esc = _glob.escape(path)
-    olds = _glob.glob(f"{esc}.old-*")
-    if not os.path.exists(path):
-        if len(olds) == 1:
-            os.replace(olds[0], path)
-            olds = []
-        elif len(olds) > 1:
-            raise RuntimeError(
-                f"ambiguous crash recovery at {path}: "
-                f"{len(olds)} .old-* directories; restore manually"
-            )
-    if read_only:
-        return
-    for o in olds:
-        shutil.rmtree(o, ignore_errors=True)
-    for s in _glob.glob(f"{esc}.staging-*"):
-        shutil.rmtree(s, ignore_errors=True)
 
 
 def _fold_sequential(
@@ -372,26 +335,281 @@ def with_retry(
 
 BUCKET_COL = "__bucket"
 
-# stored_bucket_by() sentinels: no table / no evidence either way vs.
-# "definitely bucketed, created before layout metadata existed (N lost)"
+# stored_bucket_by() sentinel: no committed table at the path
 _LAYOUT_UNKNOWN = object()
-_LAYOUT_BUCKETED_UNVERSIONED = object()
+
+# -- the commit: immutable version directories behind one pointer ----
+#
+# Every write to a copy-on-write table goes through `_commit_version`:
+# write the frame to a staging directory INSIDE the table (same
+# filesystem, so the moves below are renames), move each written leaf
+# into a fresh version slot (`v-<n>/`, or `<p>=<value>/v-<n>/` when
+# partitioned — the layout Spark's partition discovery reads with
+# basePath=<table>), then replace `_current.json` with one os.replace.
+# The pointer names the live leaf directories, the previous commit's
+# leaves, the committed schema, the layout spec and the rename map;
+# committed directories are never modified (Iceberg's snapshot commit,
+# reference :133-135). Crash contract: the pointer names complete
+# versions. Whatever it does not name — a crashed attempt's staging or
+# moved leaves — is garbage that the next commit's expiry removes. The
+# expiry keeps exactly the current and the previous commit, so a reader
+# planned one commit earlier can still finish (reference :405-423
+# expire_snapshots, with a fixed retention).
+
+POINTER = "_current.json"
+_STAGING = "_staging-"
+_FLAT = {"partition_by": None, "bucket_by": None}
+_PATH_LOCKS: dict[str, threading.Lock] = {}
+
+
+def _path_lock(path: str) -> threading.Lock:
+    return _PATH_LOCKS.setdefault(os.path.abspath(path), threading.Lock())
+
+
+def read_commit(path: str) -> dict | None:
+    """The table's committed state (the parsed pointer), or None when
+    ``path`` holds no committed table."""
+    try:
+        with open(os.path.join(path, POINTER)) as f:
+            return json.load(f)
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+
+
+def live_dirs(path: str) -> list[str] | None:
+    """Absolute live leaf directories of the pointer table at ``path``,
+    or None when ``path`` is not one (a plain parquet directory, or
+    nothing). The maintenance tools resolve tables through this, so
+    they never count or rewrite the retained previous version or a
+    crashed attempt's leftovers."""
+    commit = read_commit(path)
+    if commit is None:
+        return None
+    return [os.path.join(path, d) for d in commit["live"]]
+
+
+def _refuse_unversioned(path: str) -> None:
+    """Parquet data outside version slots with no pointer is a table
+    this class did not write (or wrote before pointer commits): there
+    is no committed schema or live set to read it through."""
+    if read_commit(path) is not None:
+        return
+    for root, dirs, files in os.walk(path):
+        # Spark's hidden-path rule: skip _x and .x, but not _p=v
+        dirs[:] = [
+            d for d in dirs if "=" in d or not d.startswith(("_", "."))
+        ]
+        if not os.path.basename(root).startswith("v-") and any(
+            f.endswith(".parquet") for f in files
+        ):
+            raise ValueError(
+                f"{path} holds parquet data but no {POINTER}: not a "
+                "pointer-committed table. Load it with spark.read and "
+                "create() a fresh table from it."
+            )
+
+
+def _read_commit(spark: SparkSession, path: str, commit: dict) -> DataFrame:
+    """One commit's rows, physical column names. The committed schema
+    is passed in, so building the read runs no schema-inference job,
+    and files written before a widening read with the widened type."""
+    schema = T.StructType.fromJson(commit["schema"])
+    if not commit["live"]:
+        return local_frame(spark, [], schema)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", path)
+        .parquet(*[os.path.join(path, d) for d in commit["live"]])
+    )
+
+
+def _union_schema(
+    committed: T.StructType, incoming: T.StructType
+) -> T.StructType:
+    """Committed schema after adding files of ``incoming``: shared
+    columns widened (raising on an unpromotable change), new columns
+    appended."""
+    widened = reconcile_types(incoming, committed)
+    names = set(committed.fieldNames())
+    return T.StructType(
+        [
+            T.StructField(f.name, widened.get(f.name, f.dataType))
+            for f in committed.fields
+        ]
+        + [f for f in incoming.fields if f.name not in names]
+    )
+
+
+def _kept_files_unreadable(
+    committed: T.StructType, incoming: T.StructType
+) -> bool:
+    """True when adding ``incoming`` widens a bigint column to double.
+    Spark's parquet reader applies every other widening widen_type
+    makes to old files on read (INT32 to bigint, double or decimal,
+    float to double, decimal to wider decimal — probed on Spark 4.1),
+    but not INT64 to double, so no file of the old version may stay
+    live."""
+    old = {f.name: f.dataType for f in committed.fields}
+    return any(
+        isinstance(old[c], T.LongType) and isinstance(dt, T.DoubleType)
+        for c, dt in reconcile_types(incoming, committed).items()
+    )
+
+
+def _move_leaves(
+    path: str, staging: str, version: int, part: str | None
+) -> list[str]:
+    """Move each leaf of a finished staging write into its version
+    slot; returns the slots, relative to the table. A slot above the
+    committed version can only hold a crashed attempt's leftover (no
+    commit names it), so it is cleared first."""
+    slot = f"v-{version}"
+    if part is None:
+        leaves = [("", staging)]
+    else:
+        leaves = [
+            (e, os.path.join(staging, e))
+            for e in sorted(os.listdir(staging))
+            if e.startswith(f"{part}=")
+        ]
+    out = []
+    for pdir, src in leaves:
+        dest = os.path.join(path, pdir, slot)
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        shutil.rmtree(dest, ignore_errors=True)
+        os.replace(src, dest)
+        out.append(f"{pdir}/{slot}" if pdir else slot)
+    return out
+
+
+def _replace_pointer(path: str, commit: dict) -> None:
+    tmp = os.path.join(path, f"{_STAGING}{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump(commit, f)
+    os.replace(tmp, os.path.join(path, POINTER))
+
+
+def _expire(path: str, commit: dict) -> None:
+    """Delete every version directory that neither ``commit`` nor its
+    predecessor names, crash leftovers and staging included."""
+    keep = {*commit["live"], *commit["previous"]}
+    for e in os.listdir(path):
+        full = os.path.join(path, e)
+        if e.startswith(_STAGING):
+            if os.path.isdir(full):
+                shutil.rmtree(full, ignore_errors=True)
+            else:
+                os.remove(full)
+        elif e.startswith("v-") and e not in keep:
+            shutil.rmtree(full, ignore_errors=True)
+        elif "=" in e and os.path.isdir(full):
+            for v in os.listdir(full):
+                if v.startswith("v-") and f"{e}/{v}" not in keep:
+                    shutil.rmtree(os.path.join(full, v), ignore_errors=True)
+            if not os.listdir(full):
+                os.rmdir(full)
+
+
+def _commit_version(
+    path: str,
+    df: DataFrame | None,
+    layout: dict,
+    keep: Sequence[str] = (),
+    colmap: dict | None = None,
+    options: dict | None = None,
+    skip_empty: bool = False,
+) -> None:
+    """The one write path of a copy-on-write table: stage ``df`` (None
+    for a metadata-only commit), move its leaves into version slots,
+    replace the pointer — new live set = ``keep`` + the moved leaves —
+    then expire. ``layout`` is the stored spec ({"partition_by",
+    "bucket_by"}); ``colmap`` None keeps the committed rename map.
+    ``skip_empty`` commits nothing when the staged write holds no
+    rows. The plan behind ``df`` may read the live
+    version: it writes to a different path."""
+    cur = read_commit(path)
+    version = cur["version"] + 1 if cur else 1
+    part = BUCKET_COL if layout["bucket_by"] else layout["partition_by"]
+    live = list(keep)
+    schema = T.StructType.fromJson(cur["schema"]) if cur else None
+    if df is not None:
+        staging = os.path.join(path, f"{_STAGING}{uuid.uuid4().hex}")
+        try:
+            w = df.write.mode("overwrite")
+            if part:
+                w = w.partitionBy(part)
+            for k, v in (options or {}).items():
+                w = w.option(k, v)
+            w.parquet(staging)
+            if skip_empty and not _has_data_files(staging):
+                shutil.rmtree(staging, ignore_errors=True)
+                if cur is None and not os.listdir(path):
+                    os.rmdir(path)
+                return
+            live += _move_leaves(path, staging, version, part)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        # the committed schema is the union of the live files' schemas:
+        # a full rewrite leaves only df's; a partial one adds df's to
+        # the kept files'. The partition column goes last, where a
+        # basePath read puts it.
+        schema = _union_schema(schema, df.schema) if keep else df.schema
+        if part:
+            schema = T.StructType(
+                [f for f in schema.fields if f.name != part]
+                + [schema[part]]
+            )
+    commit = {
+        "version": version,
+        "live": live,
+        "previous": cur["live"] if cur else [],
+        "schema": schema.jsonValue(),
+        "partition_by": layout["partition_by"],
+        "bucket_by": layout["bucket_by"],
+        "colmap": colmap if colmap is not None else (cur or {}).get(
+            "colmap", {}
+        ),
+    }
+    _replace_pointer(path, commit)
+    _expire(path, commit)
+
+
+def rewrite_live(
+    spark: SparkSession,
+    path: str,
+    transform: Callable[[DataFrame], DataFrame],
+) -> None:
+    """Commit ``transform`` of the pointer table's live rows as one new
+    version with the same layout and rename map (physical names are
+    kept) — how maintenance compaction rewrites a table."""
+    with _path_lock(path):
+        commit = read_commit(path)
+        if commit is None:
+            raise ValueError(f"no table at {path}")
+        layout = {k: commit[k] for k in ("partition_by", "bucket_by")}
+        _commit_version(
+            path, transform(_read_commit(spark, path, commit)), layout
+        )
 
 
 class MergeTable:
     """Parquet-backed keyed table with MERGE semantics (the parquet-core
     stand-in for an Iceberg table).
 
-    Layout: a directory of parquet files, optionally hash-partitioned by
-    a partition column. `merge` performs copy-on-write: read current
-    state → merge_frames → atomic directory swap. On a real lakehouse
-    this is Iceberg's job (see merge_into_sql); the class exists so the
-    whole CDC pipeline runs and is testable on plain parquet.
+    Layout: immutable version directories behind one pointer file,
+    ``_current.json`` (see `_commit_version`). Every write — `merge`,
+    `append`, `create`, `rebucket`, `rename_column` — stages its
+    output, moves it into new version slots and replaces the pointer;
+    `read` resolves the pointer once and scans exactly the live
+    directories with the committed schema, so readers need no lock and
+    never see a half-published write. On a real lakehouse this is
+    Iceberg's job (see merge_into_sql); the class exists so the whole
+    CDC pipeline runs and is testable on plain parquet.
 
     `bucket_by=N` gives a table with NO natural partition column the
     partition-pruned merge path anyway (Iceberg's `bucket(N, key)`
     hidden-partition transform): rows land in a synthetic
-    `__bucket = pmod(hash(keys), N)` directory, so a merge rewrites
+    `__bucket = pmod(hash(keys), N)` partition, so a merge rewrites
     only the buckets its batch keys hash into — O(batch-touched
     buckets), not O(table). Because the bucket is a function of the
     merge keys, an update can never move a row across buckets, which
@@ -400,8 +618,6 @@ class MergeTable:
     `read()` never returns it and batches never supply it.
     """
 
-    _path_locks: dict[str, threading.Lock] = {}
-
     def __init__(
         self,
         spark: SparkSession,
@@ -409,7 +625,6 @@ class MergeTable:
         key_columns: Sequence[str],
         partition_by: str | None = None,
         bucket_by: int | None = None,
-        durable_staging: bool = False,
         compression: str | None = None,
         max_records_per_file: int | None = None,
     ) -> None:
@@ -437,26 +652,13 @@ class MergeTable:
         self.bucket_by = bucket_by
         # Opening an existing table with the WRONG bucket layout is the
         # one config drift with no legitimate use: merges would stamp
-        # pmod(hash, wrong_N), dynamically overwrite the wrong
-        # directories, and leave the old row copies in place — silent
-        # duplicates. Iceberg prevents this by making the partition
-        # spec TABLE metadata, not caller config; same here
-        # (_layout.json, written at create/rebucket). Pre-metadata
-        # tables fall back to directory sniffing, which at least
-        # catches bucketed-vs-flat.
+        # pmod(hash, wrong_N), replace the wrong bucket directories and
+        # keep the old row copies live — silent duplicates. Iceberg
+        # prevents this by making the partition spec TABLE metadata,
+        # not caller config; same here (the pointer's bucket_by).
+        _refuse_unversioned(path)
         stored = self.stored_bucket_by(path)
-        if stored is _LAYOUT_BUCKETED_UNVERSIONED:
-            # pre-metadata bucketed table: N is unrecoverable, so any
-            # int must be taken on trust — but a flat open is provably
-            # wrong
-            if bucket_by is None:
-                raise ValueError(
-                    f"table at {path} has {BUCKET_COL}= directories "
-                    "but was opened unbucketed; merging would leave "
-                    "stale row copies behind. Open with its bucket_by, "
-                    "or migrate with rebucket(None)."
-                )
-        elif stored is not _LAYOUT_UNKNOWN and stored != bucket_by:
+        if stored is not _LAYOUT_UNKNOWN and stored != bucket_by:
             raise ValueError(
                 f"table at {path} is laid out with bucket_by={stored} "
                 f"but was opened with bucket_by={bucket_by}; merging "
@@ -464,126 +666,98 @@ class MergeTable:
                 "rows. Open with the stored value, or migrate with "
                 "rebucket()."
             )
-        # durable_staging: stage touched partitions through a parquet
-        # dir instead of localCheckpoint (survives executor loss at the
-        # cost of an extra write+read) — see _merge_partitioned_inner.
-        self.durable_staging = durable_staging
         # writer knobs (Iceberg's write.target-file-size / codec table
         # properties, parquet-core edition): codec per table, and a row
         # ceiling per file so one fat task can't emit a 10 GB file that
         # defeats downstream parallelism.
         self.compression = compression
         self.max_records_per_file = max_records_per_file
-        # in-process merge serialization: two concurrent merges on one
-        # path would both read the same base state and the later swap
-        # would silently drop the earlier batch (lost update). The CDC
-        # engine already serializes per table; this lock covers direct
-        # users sharing a session (streaming/runner.start_streams
-        # threads). CROSS-process writers still need an external lock
-        # or the Iceberg backend's optimistic commit.
-        self._lock = self._path_locks.setdefault(
-            os.path.abspath(path), threading.Lock()
-        )
+        # in-process writer serialization: two concurrent merges on one
+        # path would both read the same base commit and the later
+        # pointer replace would silently drop the earlier batch (lost
+        # update). The CDC engine already serializes per table; this
+        # lock covers direct users sharing a session
+        # (streaming/runner.start_streams threads). Readers never need
+        # it. CROSS-process writers still need an external lock or the
+        # Iceberg backend's optimistic commit.
+        self._lock = _path_lock(path)
 
     def exists(self) -> bool:
-        return os.path.exists(self.path)
-
-    # -- layout spec as table metadata (Iceberg partition-spec analog) -
-
-    @property
-    def _layout_path(self) -> str:
-        return os.path.join(self.path, "_layout.json")
-
-    def _write_layout(self) -> None:
-        import json
-
-        with open(self._layout_path, "w") as f:
-            json.dump(
-                {
-                    "partition_by": (
-                        None
-                        if self.partition_by == BUCKET_COL
-                        else self.partition_by
-                    ),
-                    "bucket_by": self.bucket_by,
-                },
-                f,
-            )
+        return read_commit(self.path) is not None
 
     @staticmethod
     def stored_bucket_by(path: str):
-        """The table's on-disk bucket layout: an int, None (laid out
-        flat / naturally partitioned), or _LAYOUT_UNKNOWN when the
-        table is absent or predates layout metadata AND shows no
-        bucket directories (nothing to contradict)."""
-        meta = os.path.join(path, "_layout.json")
-        if os.path.exists(meta):
-            import json
+        """The table's committed bucket layout: an int, None (laid out
+        flat / naturally partitioned), or _LAYOUT_UNKNOWN when no table
+        is committed at ``path``."""
+        commit = read_commit(path)
+        return _LAYOUT_UNKNOWN if commit is None else commit["bucket_by"]
 
-            with open(meta) as f:
-                return json.load(f).get("bucket_by")
-        if os.path.isdir(path):
-            # pre-metadata sniff (tables created before _layout.json):
-            # bucket dirs prove a bucketed layout but not its N —
-            # report that distinctly rather than inventing a count;
-            # data entries with no bucket dirs prove a flat/natural
-            # layout.
-            entries = os.listdir(path)
-            # checked before the metadata-file filter: the bucket
-            # column itself starts with an underscore
-            if any(e.startswith(f"{BUCKET_COL}=") for e in entries):
-                return _LAYOUT_BUCKETED_UNVERSIONED
-            if any(not e.startswith(("_", ".")) for e in entries):
-                return None
-        return _LAYOUT_UNKNOWN
+    def _head(self) -> dict:
+        commit = read_commit(self.path)
+        if commit is None:
+            raise FileNotFoundError(f"no table at {self.path}")
+        return commit
+
+    def _commit(
+        self,
+        df: DataFrame | None,
+        keep: Sequence[str] = (),
+        colmap: dict | None = None,
+        skip_empty: bool = False,
+    ) -> None:
+        layout = {
+            "partition_by": (
+                None if self.bucket_by is not None else self.partition_by
+            ),
+            "bucket_by": self.bucket_by,
+        }
+        options = {}
+        if self.compression:
+            options["compression"] = self.compression
+        if self.max_records_per_file:
+            options["maxRecordsPerFile"] = self.max_records_per_file
+        _commit_version(
+            self.path, df, layout, keep, colmap, options, skip_empty
+        )
 
     # -- column-rename evolution (metadata-only, Iceberg-style) --------
     #
-    # `rename_column` rewrites NO data: it records physical→logical
-    # name mappings in `_colmap.json` inside the table directory (the
-    # leading underscore keeps it out of every Spark scan). Files
-    # written before the rename keep the old physical column; files
-    # written after carry the new name; `read()` reconciles both with
-    # one coalesce per renamed column. This is the same trick Iceberg
-    # plays with field-ids, done with names because parquet-core has no
-    # id channel.
-
-    @property
-    def _colmap_path(self) -> str:
-        return os.path.join(self.path, "_colmap.json")
-
-    def _colmap(self) -> dict[str, str]:
-        if not os.path.exists(self._colmap_path):
-            return {}
-        import json
-
-        with open(self._colmap_path) as f:
-            return json.load(f)
+    # `rename_column` rewrites NO data: it commits a physical→logical
+    # name map in the pointer. Files written before the rename keep the
+    # old physical column; files written after carry the new name;
+    # `read()` reconciles both with one coalesce per renamed column.
+    # This is the same trick Iceberg plays with field-ids, done with
+    # names because parquet-core has no id channel.
 
     def rename_column(self, old: str, new: str) -> None:
-        cols = self.read().columns if self.exists() else []
-        if old not in cols:
-            raise ValueError(f"no such column: {old}")
-        if new in cols:
-            raise ValueError(f"column already exists: {new}")
-        if old in self.key_columns or old == self.partition_by:
-            raise ValueError(
-                f"cannot rename key/partition column: {old}"
+        with self._lock:
+            commit = read_commit(self.path)
+            cols = (
+                self._hide_bucket(self._read_raw(commit)).columns
+                if commit
+                else []
             )
-        m = self._colmap()
-        # transitive chains (a→b committed earlier, now b→c): every
-        # physical name that currently maps to `old` follows it to `new`
-        for phys, logical in list(m.items()):
-            if logical == old:
-                m[phys] = new
-        m[old] = new
-        import json
+            if old not in cols:
+                raise ValueError(f"no such column: {old}")
+            if new in cols:
+                raise ValueError(f"column already exists: {new}")
+            if old in self.key_columns or old == self.partition_by:
+                raise ValueError(
+                    f"cannot rename key/partition column: {old}"
+                )
+            m = dict(commit["colmap"])
+            # transitive chains (a→b committed earlier, now b→c): every
+            # physical name that currently maps to `old` follows it
+            for phys, logical in list(m.items()):
+                if logical == old:
+                    m[phys] = new
+            m[old] = new
+            self._commit(None, keep=commit["live"], colmap=m)
 
-        with open(self._colmap_path, "w") as f:
-            json.dump(m, f)
-
-    def _apply_colmap(self, df: DataFrame) -> DataFrame:
-        for phys, logical in self._colmap().items():
+    @staticmethod
+    def _apply_colmap(df: DataFrame, colmap: dict[str, str]) -> DataFrame:
+        for phys, logical in colmap.items():
             if phys not in df.columns:
                 continue
             if logical in df.columns:
@@ -596,73 +770,19 @@ class MergeTable:
                 df = df.withColumnRenamed(phys, logical)
         return df
 
-    # -- schema sidecar (empty-table readability) ----------------------
-    #
-    # A merge whose deletes remove the table's LAST rows leaves a
-    # parquet directory with zero data files (a dynamic partition
-    # overwrite of an empty frame writes nothing and the stale-partition
-    # cleanup removes the emptied directories), and parquet cannot infer
-    # a schema from no footers. Every write therefore records the
-    # written schema in `_schema.json`; `_read_raw` falls back to a
-    # zero-row frame of that schema, so "table exists but is empty" is a
-    # first-class state matching the MOR backend (found by the
-    # backend-equivalence property test: insert then delete one key).
-
-    @property
-    def _schema_path(self) -> str:
-        return os.path.join(self.path, "_schema.json")
-
-    def _write_schema(self, schema) -> None:
-        import json
-
-        with open(self._schema_path, "w") as f:
-            f.write(json.dumps(schema.jsonValue()))
-
-    def _read_raw(self) -> DataFrame:
-        from pyspark.errors.exceptions.base import AnalysisException
-
-        if not os.path.exists(self.path):
-            # a reader arriving inside a crashed swap's window (path
-            # renamed away, data intact in the single .old-*): heal
-            # before parquet raises PATH_NOT_FOUND. Write ops already
-            # do this at entry; reads now self-heal the same way
-            # instead of requiring a manual recover(). No-op when
-            # there is genuinely no table. read_only: the restore only
-            # — never delete another process's in-flight staging dir
-            # (the lock below is process-local)
-            with self._lock:
-                _recover_swap(self.path, read_only=True)
-
-        # mergeSchema: after schema evolution, a partition-pruned merge
-        # rewrites only touched partitions with the widened schema —
-        # untouched partition files keep the old one. Footer-of-one-file
-        # schema inference would silently drop the new columns.
-        try:
-            df = self.spark.read.option("mergeSchema", "true").parquet(
-                self.path
-            )
-        except AnalysisException as e:
-            if "UNABLE_TO_INFER_SCHEMA" not in str(e) or not os.path.exists(
-                self._schema_path
-            ):
-                raise
-            import json
-
-            from pyspark.sql.types import StructType
-
-            with open(self._schema_path) as f:
-                stored = StructType.fromJson(json.load(f))
-            df = local_frame(self.spark, [], stored)
-        return self._apply_colmap(df)
+    def _read_raw(self, commit: dict) -> DataFrame:
+        return self._apply_colmap(
+            _read_commit(self.spark, self.path, commit), commit["colmap"]
+        )
 
     def read(self) -> DataFrame:
-        df = self._read_raw()
         # the synthetic bucket column is layout metadata, not table
         # content — hiding it here keeps schema-diff/evolution and every
         # downstream consumer unaware the table is bucketed
-        if self.bucket_by is not None:
-            df = df.drop(BUCKET_COL)
-        return df
+        return self._hide_bucket(self._read_raw(self._head()))
+
+    def _hide_bucket(self, df: DataFrame) -> DataFrame:
+        return df.drop(BUCKET_COL) if self.bucket_by is not None else df
 
     def lookup(self, keys: DataFrame) -> DataFrame:
         """Point-read: table rows whose key tuple appears in ``keys``.
@@ -683,34 +803,33 @@ class MergeTable:
         if missing:
             raise ValueError(f"lookup keys missing key columns: {missing}")
         keys = keys.select(*self.key_columns).dropDuplicates()
-        df = self._read_raw()
-        prune_col: str | None = None
+        df = self._read_raw(self._head())
+        pruned = self._key_partitions(keys)
+        if pruned is not None:
+            df = df.filter(_partition_match(*pruned))
+        return self._hide_bucket(
+            df.join(keys, self.key_columns, "left_semi")
+        )
+
+    def _key_partitions(self, keys: DataFrame) -> tuple[str, list] | None:
+        """(partition column, the keys' partition values) when the
+        layout maps keys to partitions — one metadata-sized collect —
+        else None."""
         if self.bucket_by is not None:
-            prune_col = BUCKET_COL
-            key_parts = self._with_bucket(keys).select(BUCKET_COL)
+            parts = self._with_bucket(keys).select(BUCKET_COL)
         elif self.partition_by and self.partition_by in self.key_columns:
-            prune_col = self.partition_by
-            key_parts = keys.select(self.partition_by)
-        if prune_col is not None:
-            vals = [r[0] for r in key_parts.distinct().collect()]
-            df = df.filter(_partition_match(prune_col, vals))
-        out = df.join(keys, self.key_columns, "left_semi")
-        if self.bucket_by is not None:
-            out = out.drop(BUCKET_COL)
-        return out
+            parts = keys.select(self.partition_by)
+        else:
+            return None
+        return self.partition_by, [r[0] for r in parts.distinct().collect()]
 
     def rebucket(self, new_bucket_by: int | None) -> None:
         """Layout evolution: rewrite the table into ``new_bucket_by``
-        key-hash buckets (or back to flat with None) and update the
-        layout metadata — the migration path the constructor's
+        key-hash buckets (or back to flat with None) and commit the new
+        layout with it — the migration path the constructor's
         layout-mismatch error points at (Iceberg partition-spec
         evolution, done eagerly since parquet-core has no spec
-        versioning to interpret old files through).
-
-        One full read→write + atomic swap, same crash contract as the
-        unpartitioned merge: the table directory is replaced by a pair
-        of renames, never mutated in place.
-        """
+        versioning to interpret old files through)."""
         if self.partition_by is not None and self.bucket_by is None:
             raise ValueError(
                 "rebucket applies to flat or bucketed tables, not "
@@ -721,41 +840,26 @@ class MergeTable:
                 f"bucket_by must be positive: {new_bucket_by}"
             )
         with self._lock:
-            _recover_swap(self.path)
-            if not self.exists():
+            commit = read_commit(self.path)
+            if commit is None:
                 raise ValueError(f"no table at {self.path}")
             if new_bucket_by == self.bucket_by:
                 return
-            df = self._read_raw()
-            if self.bucket_by is not None:
-                df = df.drop(BUCKET_COL)
+            df = self._hide_bucket(self._read_raw(commit))
             old_spec = (self.bucket_by, self.partition_by)
             self.bucket_by = new_bucket_by
             self.partition_by = (
                 BUCKET_COL if new_bucket_by is not None else None
             )
-            # staging plan reads the OLD directory while writing the
-            # new one; the swap happens only after the write succeeds.
-            # A failed write must restore the instance spec — the disk
-            # still holds the old layout.
-            staging = f"{self.path}.staging-{uuid.uuid4().hex}"
+            # a failed commit must restore the instance spec — the
+            # pointer still names the old layout
             try:
                 if new_bucket_by is not None:
                     df = self._with_bucket(df)
-                self._write(df, staging)
+                self._commit(df)
             except BaseException:
                 self.bucket_by, self.partition_by = old_spec
-                shutil.rmtree(staging, ignore_errors=True)
                 raise
-            old = f"{self.path}.old-{uuid.uuid4().hex}"
-            os.replace(self.path, old)
-            os.replace(staging, self.path)
-            old_map = os.path.join(old, "_colmap.json")
-            if os.path.exists(old_map):
-                shutil.copy(old_map, self._colmap_path)
-            self._write_layout()
-            self._write_schema(df.schema)
-            shutil.rmtree(old, ignore_errors=True)
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         if BUCKET_COL in df.columns:
@@ -767,22 +871,34 @@ class MergeTable:
             F.pmod(F.hash(*self.key_columns), F.lit(self.bucket_by)),
         )
 
-    def _write(self, df: DataFrame, dest: str) -> None:
-        w = df.write.mode("overwrite")
-        if self.partition_by:
-            w = w.partitionBy(self.partition_by)
-        if self.compression:
-            w = w.option("compression", self.compression)
-        if self.max_records_per_file:
-            w = w.option("maxRecordsPerFile", self.max_records_per_file)
-        w.parquet(dest)
-
     def create(self, df: DataFrame) -> None:
-        if self.bucket_by is not None and BUCKET_COL not in df.columns:
+        """Commit ``df`` as the whole table content."""
+        if self.bucket_by is not None:
             df = self._with_bucket(df)
-        self._write(df, self.path)
-        self._write_layout()
-        self._write_schema(df.schema)
+        with self._lock:
+            self._commit(df)
+
+    def append(self, df: DataFrame) -> None:
+        """Commit ``df``'s rows next to the live data (the keyless CDC
+        path; Iceberg's append snapshot). The first append creates the
+        table; a later one with no rows commits nothing. New columns
+        read as NULL on older rows."""
+        if self.bucket_by is not None:
+            df = self._with_bucket(df)
+        with self._lock:
+            commit = read_commit(self.path)
+            if commit is None:
+                self._commit(df)
+                return
+            committed = T.StructType.fromJson(commit["schema"])
+            if not _kept_files_unreadable(committed, df.schema):
+                self._commit(df, keep=commit["live"], skip_empty=True)
+                return
+            self._commit(
+                self._read_raw(commit).unionByName(
+                    df, allowMissingColumns=True
+                )
+            )
 
     def merge(
         self,
@@ -791,10 +907,10 @@ class MergeTable:
         ts_col: str = "__ts_ms",
         ts_guard: bool = False,
     ) -> None:
-        """Copy-on-write merge.
+        """Copy-on-write merge, published as one commit.
 
-        Unpartitioned: full rewrite to a staging dir + atomic swap
-        (Spark can't overwrite a path that feeds the running plan).
+        Unpartitioned: merge_frames over the live version, written as
+        the next version in full.
 
         Partitioned: **partition-pruned rewrite** — the scale lever that
         makes merge cost proportional to the batch, not the table
@@ -803,120 +919,66 @@ class MergeTable:
         are: partitions of the source rows ∪ partitions of target rows
         whose KEYS appear in the batch (an update may move a row across
         partitions — its old copy must be rewritten away too). Only
-        those partitions are merged and dynamically overwritten;
-        untouched partition directories are not read or written.
+        those partitions are read and written; the commit keeps every
+        other partition's live directory and drops the affected ones
+        (a partition whose rows were all deleted writes nothing and so
+        leaves the live set).
         """
         with self._lock:
-            self._merge_inner(source, op_col, ts_col, ts_guard)
+            if self.bucket_by is not None:
+                # stamp every batch row (deletes included — a delete
+                # must rewrite the bucket holding its row)
+                source = self._with_bucket(source)
+            commit = read_commit(self.path)
+            if commit is None:
+                # NULL op is "not a delete" (same rule as merge_frames)
+                # — a bare != would NULL-drop malformed events.
+                # An all-deletes first batch commits nothing: deletes
+                # into a non-existent table are a no-op (found by the
+                # backend-equivalence property test). WRITE-FIRST, then
+                # drop the staging if empty — not a count() pre-pass,
+                # and NOT isEmpty(): the CDC engine rides its quarantine
+                # metrics on the FIRST action over the observed batch
+                # plan, and a limit-1 probe short-circuits, counting
+                # only the rows the early exit happened to scan (found
+                # by the malformed-payload engine property). The write
+                # scans every row, completing the Observation.
+                self._commit(
+                    source.filter(
+                        F.coalesce(F.col(op_col) != DELETE_OP, F.lit(True))
+                    ),
+                    skip_empty=True,
+                )
+                return
+            target = self._read_raw(commit)
+            if not self.partition_by or _kept_files_unreadable(
+                target.schema, source.schema
+            ):
+                # a full rewrite (also when no old file may stay live)
+                self._commit(
+                    merge_frames(
+                        target, source, self.key_columns, op_col, ts_col,
+                        ts_guard,
+                    )
+                )
+                return
+            from pyspark import StorageLevel
 
-    def recover(self) -> None:
-        """Heal a crashed swap (see _recover_swap) without writing.
-        Write ops run this automatically; call it explicitly when a
-        reader finds the table path missing after a writer crash."""
-        with self._lock:
-            _recover_swap(self.path)
-
-    def _merge_inner(
-        self,
-        source: DataFrame,
-        op_col: str,
-        ts_col: str,
-        ts_guard: bool,
-    ) -> None:
-        _recover_swap(self.path)
-        if self.bucket_by is not None:
-            # stamp every batch row (deletes included — a delete must
-            # rewrite the bucket holding its row) with its bucket
-            source = self._with_bucket(source)
-        if not self.exists():
-            # NULL op is "not a delete" (same rule as merge_frames) —
-            # a bare != would NULL-drop malformed events
-            inserts = source.filter(
-                F.coalesce(F.col(op_col) != DELETE_OP, F.lit(True))
-            )
-            # an all-deletes first batch would create a ZERO-FILE
-            # parquet dir (Spark writes no files for an empty frame)
-            # that every later read rejects with UNABLE_TO_INFER_SCHEMA
-            # — deletes into a non-existent table are a no-op, so leave
-            # the table uncreated (found by the backend-equivalence
-            # property test).
-            #
-            # WRITE-FIRST, then roll back if empty — not a count()
-            # pre-pass, and NOT isEmpty(): the CDC engine rides its
-            # quarantine metrics on the FIRST action over the observed
-            # batch plan, and a limit-1 probe short-circuits — metrics
-            # get counted over only the rows the early exit happened to
-            # scan, silently dropping quarantine rows (found by the
-            # malformed-payload engine property). The parquet write
-            # scans every row (no short-circuit), so it completes the
-            # Observation exactly like the old count() did while saving
-            # one full aggregate pass over the batch per table create.
-            self.create(inserts)
-            if not _has_data_files(self.path):
-                shutil.rmtree(self.path, ignore_errors=True)
-            return
-        target = self._read_raw()
-        if self.partition_by:
-            self._merge_partitioned(
-                target, source, op_col, ts_col, ts_guard
-            )
-            return
-        merged = merge_frames(
-            target, source, self.key_columns, op_col, ts_col, ts_guard
-        )
-        self._publish_rewrite(merged)
-
-    def _publish_rewrite(self, merged: DataFrame) -> None:
-        """Full-rewrite publish: write `merged` to a staging dir and
-        swap it in with a pair of renames. The plan may read the live
-        table directory — staging is a DIFFERENT path, so Spark's
-        no-self-overwrite rule never triggers and no checkpoint /
-        intermediate materialization is needed.
-
-        Staging lives NEXT TO the table, not in /tmp: across
-        filesystems shutil.move degrades to a recursive copy — not
-        atomic, double the space, and a crash mid-copy loses the
-        table path. Same-filesystem staging keeps the swap a pair of
-        renames."""
-        staging = f"{self.path}.staging-{uuid.uuid4().hex}"
-        self._write(merged, staging)
-        old = f"{self.path}.old-{uuid.uuid4().hex}"
-        os.replace(self.path, old)
-        os.replace(staging, self.path)
-        # the rename map is table METADATA riding inside the data dir —
-        # carry it across the atomic swap or renames would silently undo
-        old_map = os.path.join(old, "_colmap.json")
-        if os.path.exists(old_map):
-            shutil.copy(old_map, self._colmap_path)
-        self._write_layout()
-        self._write_schema(merged.schema)
-        shutil.rmtree(old, ignore_errors=True)
+            # The source lineage is typically the whole upstream
+            # pipeline (envelope parse + LWW in the CDC path) and is
+            # consumed twice below (partition discovery, the merge
+            # write) — persist it once instead of re-parsing per action.
+            source = source.persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                self._merge_partitioned(
+                    commit, target, source, op_col, ts_col, ts_guard
+                )
+            finally:
+                source.unpersist()
 
     def _merge_partitioned(
         self,
-        target: DataFrame,
-        source: DataFrame,
-        op_col: str,
-        ts_col: str,
-        ts_guard: bool,
-    ) -> None:
-        from pyspark import StorageLevel
-
-        p = self.partition_by
-        # The source lineage is typically the whole upstream pipeline
-        # (envelope parse + LWW window in the CDC path) and is consumed
-        # by several actions below (partition discovery, the merge join,
-        # survivors) — persist it once instead of re-parsing per action.
-        source = source.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            self._merge_partitioned_inner(
-                target, source, op_col, ts_col, ts_guard
-            )
-        finally:
-            source.unpersist()
-
-    def _merge_partitioned_inner(
-        self,
+        commit: dict,
         target: DataFrame,
         source: DataFrame,
         op_col: str,
@@ -924,16 +986,12 @@ class MergeTable:
         ts_guard: bool,
     ) -> None:
         p = self.partition_by
-        # ONE distinct for the whole affected-partition set: the old
-        # shape deduped each branch separately (src_parts.distinct(),
-        # moved_parts.distinct(), then union().distinct(), plus a
-        # .distinct() on the semi-join probe side) — every inner
-        # distinct is an extra exchange whose AQE stage jobs serialize
-        # ahead of the collect (measured: 9 stage jobs ≈ 0.9 s per
-        # merge at sf0.1). Map-side partial aggregation already
-        # shrinks the few partition values before the single final
-        # distinct, and a left-semi join never multiplies rows, so
-        # dropping the inner dedups changes nothing but the job count.
+        # ONE distinct for the whole affected-partition set: every
+        # inner distinct is an extra exchange whose AQE stage jobs
+        # serialize ahead of the collect (measured: 9 stage jobs ≈
+        # 0.9 s per merge at sf0.1). Map-side partial aggregation
+        # already shrinks the few partition values before the single
+        # final distinct, and a left-semi join never multiplies rows.
         if p in self.key_columns or self.bucket_by is not None:
             # identity partition on a merge key (e.g. the __rds_id
             # fallback) or a synthetic key-hash bucket: the key
@@ -952,101 +1010,24 @@ class MergeTable:
         parts = [r[p] for r in all_parts.collect()]
         if not parts:  # empty batch → nothing to rewrite
             return
-        # Full-rewrite detection: when the batch touches EVERY existing
-        # partition (wide-keyspace drains, small tables), the "pruned"
-        # path below degenerates to a full rewrite that ALSO pays a
-        # full-target localCheckpoint materialization — strictly worse
-        # than the unpartitioned staging+swap, which writes the table
-        # exactly once (the plan reads the live directory and writes a
-        # DIFFERENT path, so no checkpoint is needed). Directory names
-        # are reconstructed with the same escaping the writer uses
-        # (_partition_dir, proven by the stale-cleanup path), so the
-        # comparison is exact.
-        # (null partitions land as `col=__HIVE_DEFAULT_PARTITION__`,
-        # which the prefix match already covers)
-        existing_dirs = {
-            e for e in os.listdir(self.path) if e.startswith(f"{p}=")
-        }
-        touched_dirs = {_partition_dir(p, v) for v in parts}
-        if existing_dirs <= touched_dirs:
-            merged = merge_frames(
-                target, source, self.key_columns, op_col, ts_col, ts_guard
-            )
-            self._publish_rewrite(merged)
-            return
-        # Spark (rightly) refuses to overwrite a path its own plan reads
-        # from, so the affected partitions must be materialized off the
-        # source files first. localCheckpoint cuts the lineage (the
-        # checkpointed plan no longer references the table's files) at
-        # memory/local-disk cost proportional to the touched partitions
-        # — one full write+read of a staging parquet copy cheaper than
-        # the durable alternative. Tradeoff: checkpoint blocks are lost
-        # with an executor, failing the job instead of recomputing; the
-        # merge is wrapped in with_retry by callers and the overwrite is
-        # idempotent, so a retry re-runs cleanly. Set durable_staging
-        # for the parquet-staging variant on unreliable clusters.
-        if self.durable_staging:
-            staging_in = os.path.join(
-                tempfile.gettempdir(), f"mergetable-in-{uuid.uuid4().hex}"
-            )
-            target.filter(_partition_match(p, parts)).write.parquet(
-                staging_in
-            )
-            pruned_target = self.spark.read.parquet(staging_in)
-        else:
-            staging_in = None
-            pruned_target = target.filter(
-                _partition_match(p, parts)
-            ).localCheckpoint(eager=True)
-        from pyspark.sql import Observation
-
+        # the affected partitions' live directories leave the live set;
+        # names are rebuilt with the writer's escaping (_partition_dir)
+        # so the comparison with the committed leaf names is exact
+        touched = {_partition_dir(p, v) for v in parts}
         merged = merge_frames(
-            pruned_target, source, self.key_columns, op_col, ts_col, ts_guard
+            target.filter(_partition_match(p, parts)),
+            source,
+            self.key_columns,
+            op_col,
+            ts_col,
+            ts_guard,
         ).filter(_partition_match(p, parts))
-        # The surviving-partitions set rides the overwrite action via
-        # observe(collect_set) — no second job, no persist of the merged
-        # frame. Partition counts are metadata-sized (bounded by `parts`),
-        # well within driver collect_set limits.
-        obs = Observation()
-        # collect_set drops NULL, so a surviving null partition needs
-        # its own flag or the stale-cleanup below would delete it
-        merged = merged.observe(
-            obs,
-            F.collect_set(F.col(p)).alias("parts"),
-            F.max(
-                F.when(F.col(p).isNull(), F.lit(1)).otherwise(F.lit(0))
-            ).alias("null_part"),
+        self._commit(
+            merged,
+            keep=[
+                d for d in commit["live"] if d.split("/", 1)[0] not in touched
+            ],
         )
-        # dynamic partition overwrite replaces exactly the partitions
-        # present in `merged`; a partition whose rows were all deleted
-        # would be absent from `merged` and thus survive stale — write
-        # an explicit empty frame for it? No: overwrite it by unioning
-        # nothing is impossible, so delete those partition dirs directly.
-        # Per-write option, NOT a session-conf toggle: many streams share
-        # one SparkSession (streaming/runner.start_streams), and a
-        # set/restore race would let a concurrent merge run under
-        # 'static' — a static overwrite with partitionBy deletes every
-        # untouched partition. The writer option is race-free and takes
-        # precedence over the session conf.
-        w = merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        )
-        if self.compression:
-            w = w.option("compression", self.compression)
-        if self.max_records_per_file:
-            w = w.option("maxRecordsPerFile", self.max_records_per_file)
-        w.partitionBy(p).parquet(self.path)
-        surviving = set(obs.get["parts"] or [])
-        if obs.get["null_part"]:
-            surviving.add(None)
-        for stale in set(parts) - surviving:
-            shutil.rmtree(
-                os.path.join(self.path, _partition_dir(p, stale)),
-                ignore_errors=True,
-            )
-        self._write_schema(merged.schema)
-        if staging_in is not None:
-            shutil.rmtree(staging_in, ignore_errors=True)
 
 
 class MergeTableMOR:
@@ -1090,12 +1071,13 @@ class MergeTableMOR:
         # registry): without it two concurrent merges read the same
         # delta count and the later overwrite of delta-{N} silently
         # clobbers the earlier batch
-        self._lock = MergeTable._path_locks.setdefault(
-            os.path.abspath(path), threading.Lock()
-        )
+        self._lock = _path_lock(path)
+        _refuse_unversioned(self.base_path)
 
     @property
     def base_path(self) -> str:
+        """The base: a pointer-committed flat table (see
+        `_commit_version`), replaced whole by `create` and `compact`."""
         return os.path.join(self.path, "base")
 
     @property
@@ -1103,7 +1085,18 @@ class MergeTableMOR:
         return os.path.join(self.path, "_deltas")
 
     def exists(self) -> bool:
-        return os.path.exists(self.base_path)
+        return read_commit(self.base_path) is not None
+
+    def _base(self) -> DataFrame:
+        commit = read_commit(self.base_path)
+        if commit is None:
+            raise FileNotFoundError(f"no table at {self.path}")
+        return _read_commit(self.spark, self.base_path, commit)
+
+    def _commit_base(self, df: DataFrame, skip_empty: bool = False) -> None:
+        _commit_version(
+            self.base_path, df, _FLAT, skip_empty=skip_empty
+        )
 
     def _delta_paths(self) -> list[str]:
         import glob
@@ -1123,26 +1116,23 @@ class MergeTableMOR:
         return len(self._delta_paths())
 
     def create(self, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self.base_path)
+        with self._lock:
+            self._commit_base(df)
 
     def merge(self, source: DataFrame, op_col: str = "__op") -> None:
         """Append the batch as one delta (source must be pre-compacted
         to one row per key, as the CDC pipeline guarantees)."""
         with self._lock:
-            _recover_swap(self.base_path)
             if not self.exists():
                 inserts = source.filter(
                     F.coalesce(F.col(op_col) != DELETE_OP, F.lit(True))
                 )
-                # same guard as the COW path: an all-deletes first
-                # batch must not create a zero-file (unreadable) base.
-                # Write-first then roll back if empty (not count(), not
-                # isEmpty()) for the same observed-metrics reason
-                # documented in MergeTable._merge_inner — one batch
+                # same rule as the COW path: an all-deletes first batch
+                # commits no base. Write-first then drop if empty (not
+                # count(), not isEmpty()) for the same observed-metrics
+                # reason documented in MergeTable.merge — one batch
                 # scan instead of two.
-                self.create(inserts)
-                if not _has_data_files(self.base_path):
-                    shutil.rmtree(self.base_path, ignore_errors=True)
+                self._commit_base(inserts, skip_empty=True)
                 return
             # stage-then-rename: writing delta-N directly is not
             # retry-safe (with_retry wraps this in the CDC engine) — a
@@ -1194,11 +1184,7 @@ class MergeTableMOR:
 
         from data_engineering_spark.operators.dedup import keep_last_agg
 
-        if not os.path.exists(self.base_path):
-            # reader inside a crashed compact-swap window: heal before
-            # the base read raises PATH_NOT_FOUND (parity with the COW
-            # reader's self-heal; no-op when there is no table)
-            self.recover()
+        base = self._base()
         paths = self._delta_paths()
         if as_of is not None:
             if not 0 <= as_of <= len(paths):
@@ -1206,11 +1192,7 @@ class MergeTableMOR:
                     f"as_of={as_of} out of range 0..{len(paths)}"
                 )
             paths = paths[:as_of]
-        frames = [
-            self.spark.read.parquet(self.base_path).withColumn(
-                "__delta_seq", F.lit(-1)
-            )
-        ] + [
+        frames = [base.withColumn("__delta_seq", F.lit(-1))] + [
             self.spark.read.parquet(p).withColumn("__delta_seq", F.lit(i))
             for i, p in enumerate(paths)
         ]
@@ -1339,37 +1321,25 @@ class MergeTableMOR:
             if from_version <= i < to_version
         ]
         if not picked:
-            return self.spark.read.parquet(self.base_path).limit(0).withColumn(
+            return self._base().limit(0).withColumn(
                 "_commit_version", F.lit(0)
             )
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True), picked
         )
 
-    def recover(self) -> None:
-        """Heal a crashed compact swap on the base (see _recover_swap).
-        Write ops run this automatically."""
-        with self._lock:
-            _recover_swap(self.base_path)
-
     def compact(self) -> int:
-        """Fold all deltas into a new base (atomic swap); returns the
-        number of deltas folded. The MOR maintenance job: run when
+        """Fold all deltas into a new base commit; returns the number of
+        deltas folded. The MOR maintenance job: run when
         delta_count()/bytes crosses a threshold so read amplification
-        stays bounded."""
+        stays bounded. The folded deltas are removed after the base
+        commit; a crash in between leaves them to be replayed over a
+        base that already holds them."""
         with self._lock:
-            _recover_swap(self.base_path)
             paths = self._delta_paths()
             if not paths:
                 return 0
-            # same-filesystem staging: /tmp staging degrades the swap
-            # to a non-atomic cross-device copy (see MergeTable swap)
-            staging = f"{self.base_path}.staging-{uuid.uuid4().hex}"
-            self.read().write.parquet(staging)
-            old = f"{self.base_path}.old-{uuid.uuid4().hex}"
-            os.replace(self.base_path, old)
-            os.replace(staging, self.base_path)
+            self._commit_base(self.read())
             for p in paths:
                 shutil.rmtree(p, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
             return len(paths)

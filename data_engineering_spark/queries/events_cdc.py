@@ -536,8 +536,9 @@ def q_cdc_bucketed_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     `events` restricted to the looked-up keys — so the hash check
     covers batch compaction, cross-batch upsert/delete merge, the
     synthetic bucket layout round-trip, AND lookup pruning returning
-    exactly the keyed rows. Rebuilt from scratch each call (atomic
-    staging swaps inside MergeTable keep repeats self-consistent).
+    exactly the keyed rows. Rebuilt from scratch each call (MergeTable
+    commits each merge by one pointer replace, so repeats stay
+    self-consistent).
 
     The ts-median batch split is data-derived but oracle-independent:
     ANY ts-ordered split yields the same final LWW state.

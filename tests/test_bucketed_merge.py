@@ -16,7 +16,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_spark.cdc.pipeline import CdcEngine, LakeConfig
-from data_engineering_spark.operators.merge import BUCKET_COL, MergeTable
+from data_engineering_spark.operators.merge import (
+    BUCKET_COL,
+    MergeTable,
+    live_dirs,
+)
 
 
 def mk(spark, rows):
@@ -26,10 +30,22 @@ def mk(spark, rows):
 
 
 def bucket_files(path: str) -> dict[str, float]:
+    """The live data files (the pointer's leaf directories) by mtime."""
     return {
         f: os.path.getmtime(f)
-        for f in glob.glob(os.path.join(path, f"{BUCKET_COL}=*", "*.parquet"))
+        for d in live_dirs(path)
+        for f in glob.glob(os.path.join(d, "*.parquet"))
     }
+
+
+def bucket_of(f: str) -> str:
+    # <table>/__bucket=<b>/v-<n>/<file>
+    return os.path.basename(os.path.dirname(os.path.dirname(f)))
+
+
+def physical(spark, path: str):
+    """The live files read with their bucket column (read() hides it)."""
+    return spark.read.option("basePath", path).parquet(*live_dirs(path))
 
 
 def test_bucketed_matches_flat_state(spark, tmp_path):
@@ -56,7 +72,7 @@ def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
     t = MergeTable(spark, path, ["id"], bucket_by=16)
     t.merge(mk(spark, [(i, f"v{i}", 100, "c") for i in range(200)]))
     before = bucket_files(path)
-    assert len({os.path.dirname(f) for f in before}) > 4  # spread out
+    assert len({bucket_of(f) for f in before}) > 4  # spread out
 
     t.merge(mk(spark, [(7, "UPD", 200, "u")]))
 
@@ -64,17 +80,20 @@ def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
     # from the physical layout rather than re-deriving the hash here
     touched = {
         r["b"]
-        for r in spark.read.parquet(path)
+        for r in physical(spark, path)
         .filter(F.col("id") == 7)
         .select(F.col(BUCKET_COL).cast("string").alias("b"))
         .collect()
     }
     assert len(touched) == 1
     (bucket_val,) = touched
-    touched_dir = os.path.join(path, f"{BUCKET_COL}={bucket_val}")
-    for f, mtime in before.items():
-        if os.path.dirname(f) != touched_dir:
-            assert os.path.getmtime(f) == mtime, f"untouched bucket rewritten: {f}"
+    touched_dir = f"{BUCKET_COL}={bucket_val}"
+    # every other bucket's live files are exactly the ones before
+    after = bucket_files(path)
+    untouched = {f: m for f, m in before.items() if bucket_of(f) != touched_dir}
+    assert untouched == {
+        f: m for f, m in after.items() if bucket_of(f) != touched_dir
+    }, "untouched bucket rewritten"
     out = {r["id"]: r["val"] for r in t.read().collect()}
     assert out[7] == "UPD" and len(out) == 200
 
@@ -85,17 +104,18 @@ def test_delete_rewrites_its_bucket_only(spark, tmp_path):
     t.merge(mk(spark, [(i, f"v{i}", 100, "c") for i in range(80)]))
     (victim,) = {
         r["b"]
-        for r in spark.read.parquet(path)
+        for r in physical(spark, path)
         .filter(F.col("id") == 5)
         .select(F.col(BUCKET_COL).cast("string").alias("b"))
         .collect()
     }
-    victim_dir = os.path.join(path, f"{BUCKET_COL}={victim}")
+    victim_dir = f"{BUCKET_COL}={victim}"
     before = bucket_files(path)
     t.merge(mk(spark, [(5, None, 200, "d")]))
-    for f, mtime in before.items():
-        if os.path.dirname(f) != victim_dir:
-            assert os.path.getmtime(f) == mtime
+    after = bucket_files(path)
+    assert {f: m for f, m in before.items() if bucket_of(f) != victim_dir} == {
+        f: m for f, m in after.items() if bucket_of(f) != victim_dir
+    }
     assert t.read().filter(F.col("id") == 5).count() == 0
     assert t.read().count() == 79
 
@@ -229,13 +249,14 @@ def test_layout_mismatch_refused(spark, tmp_path):
         MergeTable(spark, path, ["id"], bucket_by=8)
     with pytest.raises(ValueError, match="bucket_by=16"):
         MergeTable(spark, path, ["id"])
-    # pre-metadata table (no _layout.json): bucket dirs still prove a
-    # bucketed layout, so a flat open is refused; a bucketed open is
-    # taken on trust (N unrecoverable)
-    os.remove(os.path.join(path, "_layout.json"))
-    with pytest.raises(ValueError, match="directories"):
-        MergeTable(spark, path, ["id"])
-    MergeTable(spark, path, ["id"], bucket_by=16)  # trusted
+    # a directory of parquet data with no pointer has no committed
+    # layout to check against: every open is refused, naming the path
+    plain = str(tmp_path / "plain")
+    mk(spark, [(1, "a", 100, "c")]).write.partitionBy("id").parquet(plain)
+    for kwargs in ({}, {"bucket_by": 16}):
+        with pytest.raises(ValueError, match="no _current.json") as e:
+            MergeTable(spark, plain, ["id"], **kwargs)
+        assert plain in str(e.value)
 
     flat_path = str(tmp_path / "flat")
     MergeTable(spark, flat_path, ["id"]).merge(
@@ -254,9 +275,7 @@ def test_rebucket_migrates_layout(spark, tmp_path):
     t.rebucket(4)
     assert t.bucket_by == 4 and t.partition_by == BUCKET_COL
     assert sorted(map(tuple, t.read().collect())) == before
-    dirs = {
-        d for d in os.listdir(path) if d.startswith(f"{BUCKET_COL}=")
-    }
+    dirs = {os.path.basename(os.path.dirname(d)) for d in live_dirs(path)}
     assert dirs <= {f"{BUCKET_COL}={i}" for i in range(4)}
     # metadata follows: reopen with 4 works, stale 16 is refused
     MergeTable(spark, path, ["id"], bucket_by=4)
@@ -318,64 +337,29 @@ def test_cdc_engine_adopts_stored_layout(spark, tmp_path):
     assert eng_b.get_table("orders", ["id"]).bucket_by is None
 
 
-def test_swap_crash_recovery(spark, tmp_path):
-    """A crash between the swap's two renames leaves no table at path
-    (data stranded in .old-*); the next write op — or an explicit
-    recover() — must restore it and discard the unpublished staging."""
-    import shutil
-
-    path = str(tmp_path / "t")
-    t = MergeTable(spark, path, ["id"])
-    t.merge(mk(spark, [(1, "a", 100, "c"), (2, "b", 100, "c")]))
-    before = sorted(map(tuple, t.read().collect()))
-
-    # simulate the crash window: first rename done, second never ran
-    os.replace(path, f"{path}.old-deadbeef")
-    os.makedirs(f"{path}.staging-cafe")  # unpublished partial write
-    assert not t.exists()
-
-    t.recover()
-    assert sorted(map(tuple, t.read().collect())) == before
-    assert not os.path.exists(f"{path}.old-deadbeef")
-    assert not os.path.exists(f"{path}.staging-cafe")
-
-    # post-swap garbage (.old left by a crash after the second rename)
-    os.makedirs(f"{path}.old-feedface")
-    t.merge(mk(spark, [(1, "a2", 200, "u")]))
-    assert not os.path.exists(f"{path}.old-feedface")
-    got = {r["id"]: r["val"] for r in t.read().collect()}
-    assert got == {1: "a2", 2: "b"}
-
-    # ambiguity refuses to guess
-    os.replace(path, f"{path}.old-one")
-    os.makedirs(f"{path}.old-two")
-    with pytest.raises(RuntimeError, match="ambiguous"):
-        t.recover()
-    shutil.rmtree(f"{path}.old-two")
-    t.recover()
-    assert t.exists()
-
-
-def test_mor_compact_crash_recovery(spark, tmp_path):
+def test_mor_compact_crash_recovery(spark, tmp_path, monkeypatch):
+    """compact() commits the new base like any COW write: a crash at
+    any commit step leaves read() at the pre-compact state, and the
+    next merge and compact proceed."""
     from data_engineering_spark.operators.merge import MergeTableMOR
+    from tests.test_table_commit import COMMIT_STEPS, Crash, crash
 
-    path = str(tmp_path / "m")
-    t = MergeTableMOR(spark, path, ["id"])
-    t.merge(mk(spark, [(1, "a", 100, "c"), (2, "b", 100, "c")]))
-    t.merge(mk(spark, [(1, "a2", 200, "u")]))
-    before = sorted(map(tuple, t.read().select("id", "val").collect()))
-
-    base = t.base_path
-    os.replace(base, f"{base}.old-deadbeef")
-    t.recover()
-    assert sorted(
-        map(tuple, t.read().select("id", "val").collect())
-    ) == before
-    # and the next write op heals on its own
-    os.replace(base, f"{base}.old-deadbeef")
-    t.merge(mk(spark, [(3, "c", 300, "c")]))
-    got = {r["id"]: r["val"] for r in t.read().collect()}
-    assert got == {1: "a2", 2: "b", 3: "c"}
+    for step in COMMIT_STEPS:
+        t = MergeTableMOR(spark, str(tmp_path / step), ["id"])
+        t.merge(mk(spark, [(1, "a", 100, "c"), (2, "b", 100, "c")]))
+        t.merge(mk(spark, [(1, "a2", 200, "u")]))
+        before = sorted(map(tuple, t.read().select("id", "val").collect()))
+        with monkeypatch.context() as m:
+            m.setattr(f"data_engineering_spark.operators.merge.{step}", crash)
+            with pytest.raises(Crash):
+                t.compact()
+        assert sorted(
+            map(tuple, t.read().select("id", "val").collect())
+        ) == before
+        t.merge(mk(spark, [(3, "c", 300, "c")]))
+        assert t.compact() >= 1
+        got = {r["id"]: r["val"] for r in t.read().collect()}
+        assert got == {1: "a2", 2: "b", 3: "c"}, step
 
 
 def test_delete_last_row_leaves_readable_empty_table(spark, tmp_path):
@@ -384,7 +368,7 @@ def test_delete_last_row_leaves_readable_empty_table(spark, tmp_path):
     zero-data-file directory — the dynamic overwrite of the empty
     merged frame writes nothing and the stale-partition cleanup removes
     the emptied bucket dirs — and every later read died with
-    UNABLE_TO_INFER_SCHEMA. The `_schema.json` sidecar now makes
+    UNABLE_TO_INFER_SCHEMA. The pointer's committed schema now makes
     "exists but empty" a readable state, matching the MOR backend."""
     for kwargs in ({"bucket_by": 4}, {}):
         sub = "buck" if kwargs else "flat"
@@ -423,26 +407,3 @@ def test_partitioned_delete_all_rows_readable(spark, tmp_path):
     assert t.exists()
     assert t.read().count() == 0
     assert "pt" in t.read().columns
-
-
-def test_reader_self_heals_crashed_swap(spark, tmp_path):
-    """A READER arriving inside the swap crash window (table path
-    renamed away, data intact in the single .old-*) heals on its own —
-    no manual recover() call, COW and MOR alike."""
-    from data_engineering_spark.operators.merge import MergeTableMOR
-
-    path = str(tmp_path / "cow")
-    t = MergeTable(spark, path, ["id"])
-    t.merge(mk(spark, [(1, "a", 100, "c"), (2, "b", 100, "c")]))
-    os.replace(path, f"{path}.old-crash")
-    got = {r["id"]: r["val"] for r in t.read().collect()}
-    assert got == {1: "a", 2: "b"}
-    assert t.exists()
-
-    mpath = str(tmp_path / "mor")
-    m = MergeTableMOR(spark, mpath, ["id"])
-    m.merge(mk(spark, [(1, "a", 100, "c")]))
-    m.merge(mk(spark, [(2, "b", 200, "c")]))
-    os.replace(m.base_path, f"{m.base_path}.old-crash")
-    got = {r["id"]: r["val"] for r in m.read().collect()}
-    assert got == {1: "a", 2: "b"}

@@ -186,6 +186,8 @@ def test_monthly_partitioning_from_created_column(spark, tmp_path):
     import glob
     import os
 
+    from data_engineering_spark.operators.merge import live_dirs
+
     eng = CdcEngine(spark, LakeConfig(root=str(tmp_path / "lake")))
     fields = SALES_FIELDS + [
         {
@@ -206,18 +208,24 @@ def test_monthly_partitioning_from_created_column(spark, tmp_path):
                  op="c", ts_ms=1000, fields=fields),
     ]))
     path = eng.tables["sales"].path
-    parts = sorted(
-        os.path.basename(d) for d in glob.glob(os.path.join(path, "__part=*"))
-    )
-    assert parts == ["__part=2024-01", "__part=2024-03"]
 
-    mar_files = set(glob.glob(os.path.join(path, "__part=2024-03", "*")))
+    def live_parts():
+        # partition dir -> its live version dir
+        return {
+            os.path.basename(os.path.dirname(d)): d for d in live_dirs(path)
+        }
+
+    assert sorted(live_parts()) == ["__part=2024-01", "__part=2024-03"]
+
+    mar_dir = live_parts()["__part=2024-03"]
+    mar_files = set(glob.glob(os.path.join(mar_dir, "*")))
     eng.process_batch(envelope_frame(spark, [
         envelope({"sale_id": 1},
                  {"sale_id": 1, "item_id": 9, "price": 1.5, "created_at": jan},
                  op="u", ts_ms=2000, fields=fields),
     ]))
-    assert set(glob.glob(os.path.join(path, "__part=2024-03", "*"))) == mar_files
+    assert live_parts()["__part=2024-03"] == mar_dir
+    assert set(glob.glob(os.path.join(mar_dir, "*"))) == mar_files
     s = state(eng)
     assert s[1]["item_id"] == 9
     import datetime as dt
@@ -273,7 +281,7 @@ def test_malformed_envelope_quarantined(spark, tmp_path):
     eng = CdcEngine(spark, LakeConfig(root=root))
     eng.process_batch(df)
 
-    table = spark.read.parquet(os.path.join(root, "s"))
+    table = eng.tables["s"].read()
     assert {r["id"] for r in table.collect()} == {1, 3}
     assert table.filter(table.id.isNull()).count() == 0
     quarantined = spark.read.parquet(os.path.join(root, "_quarantine", "s"))
@@ -307,7 +315,7 @@ def test_quarantine_off_reference_parity(spark, tmp_path):
     root = str(tmp_path / "lake_p")
     eng = CdcEngine(spark, LakeConfig(root=root, quarantine=False))
     eng.process_batch(df)
-    table = spark.read.parquet(os.path.join(root, "s"))
+    table = eng.tables["s"].read()
     assert table.count() == 2
     assert table.filter(table.id.isNull()).count() == 1
     assert not os.path.exists(os.path.join(root, "_quarantine"))
@@ -351,21 +359,20 @@ def test_clean_batch_creates_no_quarantine_dir(spark, tmp_path):
     root = str(tmp_path / "lake_clean")
     eng = CdcEngine(spark, LakeConfig(root=root))
     eng.process_batch(_simple_envelope_batch(spark, [1, 2, 3]))
-    assert spark.read.parquet(os.path.join(root, "s")).count() == 3
+    assert eng.tables["s"].read().count() == 3
     assert not os.path.exists(os.path.join(root, "_quarantine"))
     # a later batch that IS malformed still quarantines through the
     # same observed plan (merge happens first, quarantine write after)
     eng.process_batch(_simple_envelope_batch(spark, [4], malformed=True))
     q = spark.read.parquet(os.path.join(root, "_quarantine", "s"))
     assert q.count() == 1 and q.collect()[0]["__ts_ms"] == 999
-    assert spark.read.parquet(os.path.join(root, "s")).count() == 4
+    assert eng.tables["s"].read().count() == 4
 
 
 def test_merge_retried_on_transient_failure(spark, tmp_path):
     """The keyed MERGE runs inside the reference's optimistic-commit
     retry loop (incremental_kafka_s3_cdc.py:281-292): a transient
-    failure in the merge backend recovers without failing the batch —
-    this is also what makes non-durable localCheckpoint staging safe."""
+    failure in the merge backend recovers without failing the batch."""
     import os
 
     from data_engineering_spark.cdc.pipeline import CdcEngine, LakeConfig
@@ -390,7 +397,7 @@ def test_merge_retried_on_transient_failure(spark, tmp_path):
     )
     eng.process_batch(_simple_envelope_batch(spark, [1, 2]))
     assert calls["n"] == 2  # failed once, retried, succeeded
-    table = spark.read.parquet(os.path.join(root, "s"))
+    table = eng.tables["s"].read()
     assert {r["id"] for r in table.collect()} == {1, 2}
 
 

@@ -15,6 +15,7 @@ from data_engineering_spark.operators.merge import (
     MergeTable,
     MergeTableMOR,
     _partition_dir,
+    read_commit,
 )
 
 
@@ -73,21 +74,23 @@ def test_null_partition_rows_survive_partitioned_merge(spark, tmp_path):
     rows = {r["id"]: (r["val"], r["pt"]) for r in t.read().collect()}
     assert rows == {1: ("a", "p1"), 2: ("b2", None), 3: ("c", None)}
 
-    # deleting every null-partition row must clean up its directory
+    # deleting every null-partition row must drop its directory from
+    # the live set
     b3 = spark.createDataFrame(
         [(2, None, None, 300, "d"), (3, None, None, 300, "d")],
         "id int, val string, pt string, __ts_ms long, __op string",
     )
     t.merge(b3)
     assert {r["id"] for r in t.read().collect()} == {1}
-    assert not os.path.exists(
-        os.path.join(str(tmp_path / "t"), "pt=__HIVE_DEFAULT_PARTITION__")
-    )
+    assert not [
+        d for d in read_commit(t.path)["live"]
+        if d.startswith("pt=__HIVE_DEFAULT_PARTITION__/")
+    ]
 
 
 def test_stale_partition_cleanup_with_escaped_value(spark, tmp_path):
-    """Spark writes 'a/b' as pt=a%2Fb; the old cleanup built the raw
-    name, removed nothing, and deleted rows resurrected on read."""
+    """Spark writes 'a/b' as pt=a%2Fb; a cleanup built from the raw
+    name removed nothing, and deleted rows resurrected on read."""
     assert _partition_dir("pt", "a/b") == "pt=a%2Fb"
     t = MergeTable(
         spark, str(tmp_path / "t"), ["id"], partition_by="pt"
@@ -103,9 +106,9 @@ def test_stale_partition_cleanup_with_escaped_value(spark, tmp_path):
     )
     t.merge(b2)
     assert {r["id"] for r in t.read().collect()} == {2}
-    assert not os.path.exists(
-        os.path.join(str(tmp_path / "t"), "pt=a%2Fb")
-    )
+    assert not [
+        d for d in read_commit(t.path)["live"] if d.startswith("pt=a%2Fb/")
+    ]
 
 
 def test_mor_base_without_op_survives_delta_reads(spark, tmp_path):

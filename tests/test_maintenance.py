@@ -29,17 +29,55 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
 
 def test_remove_orphans(tmp_path):
     root = str(tmp_path)
-    os.makedirs(os.path.join(root, "t.old-abc"))
-    os.makedirs(os.path.join(root, "t.compact-def"))
+    # a crashed plain-directory compaction's staging and displaced dirs
+    os.makedirs(os.path.join(root, "t.compact-abc"))
+    os.makedirs(os.path.join(root, "t.compact-def-replaced"))
     os.makedirs(os.path.join(root, "t"))
     # freshly-created dirs are protected by the age cutoff: a sweep
-    # must never delete the LIVE staging of a concurrent compact/merge
+    # must never delete the LIVE staging of a concurrent compaction
     assert remove_orphans(root) == 0
-    assert os.path.isdir(os.path.join(root, "t.compact-def"))
+    assert os.path.isdir(os.path.join(root, "t.compact-abc"))
     # a negative age sweeps immediately (the test's stand-in for "old")
     assert remove_orphans(root, max_age_s=-1) == 2
-    assert glob.glob(os.path.join(root, "*.old-*")) == []
+    assert glob.glob(os.path.join(root, "*.compact-*")) == []
     assert os.path.isdir(os.path.join(root, "t"))
+
+
+def test_compact_pointer_table_sees_only_live_files(spark, tmp_path):
+    """A pointer table keeps its previous version on disk; inventory
+    counts and compaction rewrites only the live files, and the
+    compacted version is committed with the rows unchanged."""
+    from data_engineering_spark.operators.maintenance import lake_inventory
+    from data_engineering_spark.operators.merge import MergeTable, live_dirs
+
+    root = str(tmp_path / "lake")
+    t = MergeTable(spark, f"{root}/t", ["id"], partition_by="p")
+    rows = spark.range(400).selectExpr(
+        "id", "CAST(id % 2 AS INT) AS p", "1L AS __ts_ms", "'c' AS __op"
+    )
+    t.merge(rows.repartition(12))
+    # supersede partition 0's version: its old files stay on disk
+    t.merge(rows.filter("p = 0").repartition(6))
+    before = sorted(map(tuple, t.read().collect()))
+
+    def n_live():
+        return sum(
+            len(glob.glob(os.path.join(d, "*.parquet")))
+            for d in live_dirs(t.path)
+        )
+
+    on_disk = len(glob.glob(os.path.join(t.path, "**", "*.parquet"),
+                            recursive=True))
+    assert n_live() < on_disk
+    assert data_file_sizes(t.path) and len(data_file_sizes(t.path)) == n_live()
+    inv = {r["table"]: r for r in lake_inventory(spark, root).collect()}
+    assert inv["t"]["n_files"] == n_live()
+
+    assert compact_table(spark, t.path) is True
+    assert sorted(map(tuple, t.read().collect())) == before
+    assert n_live() <= 2  # one file per partition
+    inv = {r["table"]: r for r in lake_inventory(spark, root).collect()}
+    assert inv["t"]["n_files"] == n_live()
 
 
 def test_iceberg_maintenance_sql():

@@ -230,7 +230,7 @@ def test_mergetable_writer_knobs(spark, tmp_path):
     edition)."""
     import glob
 
-    from data_engineering_spark.operators.merge import MergeTable
+    from data_engineering_spark.operators.merge import MergeTable, live_dirs
 
     t = MergeTable(
         spark, str(tmp_path / "knobs"), ["id"],
@@ -241,7 +241,8 @@ def test_mergetable_writer_knobs(spark, tmp_path):
         "CAST(1 AS LONG) AS __ts_ms", "'c' AS __op",
     ).coalesce(1)
     t.merge(df)
-    files = glob.glob(f"{t.path}/*.gz.parquet")
+    (live,) = live_dirs(t.path)
+    files = glob.glob(f"{live}/*.gz.parquet")
     assert files, "gzip codec not applied"
     # one input partition, 450 rows, ceiling 100 -> >= 5 files
     assert len(files) >= 5

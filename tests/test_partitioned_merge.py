@@ -5,13 +5,24 @@ from __future__ import annotations
 import glob
 import os
 
-from data_engineering_spark.operators.merge import MergeTable
+import pytest
+
+from data_engineering_spark.operators.merge import MergeTable, live_dirs
+
+
+def part_dirs(path: str, part: str) -> list[str]:
+    """The partition's live leaf directories (the pointer's view)."""
+    return [
+        d for d in live_dirs(path)
+        if os.path.basename(os.path.dirname(d)) == part
+    ]
 
 
 def files_in(path: str, part: str) -> dict[str, float]:
     return {
         f: os.path.getmtime(f)
-        for f in glob.glob(os.path.join(path, part, "*.parquet"))
+        for d in part_dirs(path, part)
+        for f in glob.glob(os.path.join(d, "*.parquet"))
     }
 
 
@@ -31,6 +42,8 @@ def test_partitioned_merge_only_touches_affected(spark, tmp_path):
     ]))
     before_feb = files_in(path, "month=2024-02")
     before_mar = files_in(path, "month=2024-03")
+    mar_dirs = part_dirs(path, "month=2024-03")
+    jan_dirs = part_dirs(path, "month=2024-01")
     assert before_feb and before_mar
 
     # touch only January
@@ -38,6 +51,8 @@ def test_partitioned_merge_only_touches_affected(spark, tmp_path):
 
     assert files_in(path, "month=2024-02") == before_feb
     assert files_in(path, "month=2024-03") == before_mar
+    assert part_dirs(path, "month=2024-03") == mar_dirs
+    assert part_dirs(path, "month=2024-01") != jan_dirs
     out = {r["id"]: (r["val"], r["month"]) for r in t.read().collect()}
     assert out == {1: ("A", "2024-01"), 2: ("b", "2024-02"),
                    3: ("c", "2024-03")}
@@ -59,8 +74,8 @@ def test_partition_moving_update(spark, tmp_path):
 
 
 def test_partition_fully_deleted(spark, tmp_path):
-    """Deleting every row of a partition removes its directory (dynamic
-    overwrite alone would leave it stale)."""
+    """Deleting every row of a partition drops it from the live set
+    (its staging write produces no leaf to replace it with)."""
     path = str(tmp_path / "t")
     t = MergeTable(spark, path, ["id"], partition_by="month")
     t.merge(mk(spark, [
@@ -70,7 +85,7 @@ def test_partition_fully_deleted(spark, tmp_path):
     t.merge(mk(spark, [(1, None, "2024-01", 200, "d")]))
     out = {r["id"]: r["month"] for r in t.read().collect()}
     assert out == {2: "2024-02"}
-    assert not glob.glob(os.path.join(path, "month=2024-01", "*.parquet"))
+    assert part_dirs(path, "month=2024-01") == []
 
 
 def test_partitioned_delete_and_insert_same_batch(spark, tmp_path):
@@ -154,16 +169,11 @@ def test_concurrent_partitioned_merges_no_cross_table_damage(spark, tmp_path):
         assert out == {1: f"{tag}2", 2: "b", 3: "c"}
 
 
-def test_full_touch_batch_takes_swap_path(spark, tmp_path):
-    """A batch touching EVERY existing partition publishes via
-    staging+swap (one table write, no full-target checkpoint) instead
-    of the pruned dynamic overwrite; a subset batch keeps overwriting
-    in place. Observable: the swap replaces the table directory inode,
-    in-place overwrite keeps it."""
-    import os
-
-    from data_engineering_spark.operators.merge import MergeTable
-
+def test_full_touch_batch_replaces_every_partition(spark, tmp_path):
+    """A batch touching EVERY existing partition is the same commit as
+    a pruned one with every partition replaced: no live directory of
+    the previous version survives, while a subset batch keeps the
+    untouched partitions' directories."""
     path = str(tmp_path / "t")
     t = MergeTable(spark, path, ["id"], partition_by="pt")
 
@@ -173,16 +183,65 @@ def test_full_touch_batch_takes_swap_path(spark, tmp_path):
         )
 
     t.merge(mk([(1, "a", "v1", 100, "c"), (2, "b", "v2", 100, "c")]))
-    ino_after_create = os.stat(path).st_ino
+    created = set(live_dirs(path))
 
-    # subset batch: only partition 'a' touched -> in-place dynamic
-    # overwrite, directory inode survives
+    # subset batch: only partition 'a' touched -> 'b' stays live as is
     t.merge(mk([(1, "a", "v1b", 200, "u")]))
-    assert os.stat(path).st_ino == ino_after_create
+    subset = set(live_dirs(path))
+    assert subset & created == set(part_dirs(path, "pt=b"))
 
-    # full-touch batch: both partitions -> staging+swap, new inode
+    # full-touch batch: both partitions replaced
     t.merge(mk([(1, "a", "v1c", 300, "u"), (3, "b", "v3", 300, "c")]))
-    assert os.stat(path).st_ino != ino_after_create
+    assert not set(live_dirs(path)) & subset
 
     got = sorted((r["id"], r["pt"], r["val"]) for r in t.read().collect())
     assert got == [(1, "a", "v1c"), (2, "b", "v2"), (3, "b", "v3")]
+
+
+@pytest.mark.parametrize(
+    "old_type, new_type, value",
+    [("int", "bigint", 2**40), ("bigint", "double", 0.5)],
+)
+def test_widened_batch_touching_one_partition_reads_back(
+    spark, tmp_path, old_type, new_type, value
+):
+    """Regression: a batch widening int to bigint that touches one of
+    two partitions left files of both types live, and the next read()
+    failed with CANNOT_MERGE_SCHEMAS. The committed schema carries the
+    widened type and old files read through it — except bigint files,
+    which Spark cannot read as double, so that widening rewrites every
+    partition."""
+    t = MergeTable(spark, str(tmp_path / "t"), ["id"], partition_by="month")
+    t.merge(spark.createDataFrame(
+        [(1, 10, "2024-01", 100, "c"), (2, 20, "2024-02", 100, "c")],
+        f"id long, qty {old_type}, month string, __ts_ms long, __op string",
+    ))
+    t.merge(spark.createDataFrame(
+        [(1, value, "2024-01", 200, "u")],
+        f"id long, qty {new_type}, month string, __ts_ms long, __op string",
+    ))
+    df = t.read()
+    assert dict(df.dtypes)["qty"] == new_type
+    assert {r["id"]: r["qty"] for r in df.collect()} == {1: value, 2: 20}
+
+
+def test_append_new_column_reads_null_on_old_rows(spark, tmp_path):
+    """A keyless append whose batch adds a column commits it into the
+    table schema: old rows read it as NULL, and no row is lost. A
+    batch widening bigint to double (a type Spark cannot read old
+    bigint files as) rewrites the table once."""
+    t = MergeTable(spark, str(tmp_path / "t"), [])
+    t.append(spark.createDataFrame(
+        [(1, "a", 5), (2, "b", 6)], "id long, v string, n long"
+    ))
+    t.append(spark.createDataFrame(
+        [(3, "c", 0.5)], "id long, v string, disc double"
+    ))
+    got = {r["id"]: (r["v"], r["disc"]) for r in t.read().collect()}
+    assert got == {1: ("a", None), 2: ("b", None), 3: ("c", 0.5)}
+    t.append(spark.createDataFrame([(4, 1.5)], "id long, n double"))
+    df = t.read()
+    assert dict(df.dtypes)["n"] == "double"
+    assert {r["id"]: r["n"] for r in df.collect()} == {
+        1: 5.0, 2: 6.0, 3: None, 4: 1.5
+    }

@@ -2,12 +2,18 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
-from data_engineering_spark.operators.merge import MergeTable
+from data_engineering_spark.operators.merge import (
+    MergeTable,
+    live_dirs,
+    read_commit,
+)
+
+
+def _live_files(spark, t: MergeTable) -> set[str]:
+    return set(spark.read.parquet(*live_dirs(t.path)).inputFiles())
 
 
 def _batch(spark, rows):
@@ -19,11 +25,11 @@ def _batch(spark, rows):
 def test_rename_is_metadata_only_and_survives_merge(spark, tmp_path):
     t = MergeTable(spark, str(tmp_path / "rn"), ["id"])
     t.merge(_batch(spark, [(1, "a", 100, "c"), (2, "b", 100, "c")]))
-    files_before = set(spark.read.parquet(t.path).inputFiles())
+    files_before = _live_files(spark, t)
 
     t.rename_column("val", "value")
     # no data rewrite happened
-    assert set(spark.read.parquet(t.path).inputFiles()) == files_before
+    assert _live_files(spark, t) == files_before
     assert sorted(t.read().columns) == sorted(
         ["id", "value", "__ts_ms", "__op"]
     )
@@ -40,8 +46,8 @@ def test_rename_is_metadata_only_and_survives_merge(spark, tmp_path):
     )
     got = {r["id"]: r["value"] for r in t.read().collect()}
     assert got == {1: "a", 2: "b2", 3: "c"}
-    # rename map survived the copy-on-write directory swap
-    assert os.path.exists(t._colmap_path)
+    # rename map survived the copy-on-write commit
+    assert read_commit(t.path)["colmap"] == {"val": "value"}
 
 
 def test_rename_chain_and_guards(spark, tmp_path):

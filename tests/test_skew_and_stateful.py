@@ -99,27 +99,18 @@ def test_keep_last_agg_matches_window_on_hot_key(spark):
 
 
 def test_cdc_engine_lww_agg_mode(spark, tmp_path):
-    """The pipeline's lww='agg' switch produces the same lake state as
-    the default window LWW on a batch with duplicate keyed updates."""
-    import os
-
+    """The pipeline's aggregate LWW (keep_last_agg) keeps the latest
+    row per key on a batch with duplicate keyed updates."""
     from data_engineering_spark.cdc.pipeline import CdcEngine, LakeConfig
     from tests.test_cdc import _simple_envelope_batch
 
-    outs = {}
-    for mode in ("window", "agg"):
-        root = str(tmp_path / f"lake_{mode}")
-        eng = CdcEngine(spark, LakeConfig(root=root, lww=mode))
-        batch = _simple_envelope_batch(spark, [1, 2, 3]).union(
-            _simple_envelope_batch(spark, [2, 3, 4])
-        )
-        eng.process_batch(batch)
-        outs[mode] = sorted(
-            (r["id"], r["v"])
-            for r in spark.read.parquet(os.path.join(root, "s")).collect()
-        )
-    assert outs["window"] == outs["agg"]
-    assert [i for i, _ in outs["agg"]] == [1, 2, 3, 4]
+    eng = CdcEngine(spark, LakeConfig(root=str(tmp_path / "lake")))
+    batch = _simple_envelope_batch(spark, [1, 2, 3]).union(
+        _simple_envelope_batch(spark, [2, 3, 4])
+    )
+    eng.process_batch(batch)
+    got = sorted((r["id"], r["v"]) for r in eng.tables["s"].read().collect())
+    assert [i for i, _ in got] == [1, 2, 3, 4]
 
 
 def test_salted_broadcast_join_matches_plain(spark):
