@@ -7,8 +7,10 @@ entry points (cdc, snapshot). Subcommands:
   offsets    --checkpoint DIR           streaming offset log + commits
 
 Each prints a small table to stdout; exit code 0 on success. All are
-metadata-dominated operations safe to run beside live pipelines
-(compact publishes a pointer table's result as one new version).
+metadata-dominated operations safe to run beside live pipelines on
+the same filesystem (compact holds the table's writer lock, an flock
+the pipeline's writers also take, and publishes the result as one new
+version).
 """
 
 from __future__ import annotations

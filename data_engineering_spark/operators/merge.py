@@ -39,6 +39,8 @@ and a crash at any step leaves the previous commit readable.
 
 from __future__ import annotations
 
+import fcntl
+import glob
 import json
 import os
 import shutil
@@ -58,8 +60,8 @@ UPSERT_OPS = ("c", "u", "r")
 DELETE_OP = "d"
 
 # Spark/Hive partition-directory escaping (ExternalCatalogUtils): these
-# chars plus all control chars are %XX-encoded in dir names; NULL
-# partition values map to the default-partition sentinel. Needed
+# chars plus all control chars are %XX-encoded in dir names; NULL and
+# empty partition values map to the default-partition sentinel. Needed
 # whenever a directory name is RECONSTRUCTED from a value (dropping a
 # merge's affected partitions from the live set) — a raw
 # f"{col}={value}" misses the escaping and silently keeps a stale
@@ -68,8 +70,12 @@ _PART_ESCAPE = set('"#%\'*/:=?\\\x7f{[]^')
 _NULL_PART_DIR = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _partition_dir(col: str, value) -> str:
-    if value is None:
+def _partition_dir(col: str, value: str | None) -> str:
+    """The leaf name Spark writes for a partition value, given the
+    value's Spark string form (``cast(col as string)`` in the writing
+    session's time zone — the partition writer's own rendering: Python's
+    str() gives ``True`` for ``true``, ``1e+20`` for ``1.0E20``)."""
+    if value is None or value == "":
         return f"{col}={_NULL_PART_DIR}"
     escaped = "".join(
         f"%{ord(ch):02X}" if ch in _PART_ESCAPE or ord(ch) < 32 else ch
@@ -340,30 +346,57 @@ _LAYOUT_UNKNOWN = object()
 
 # -- the commit: immutable version directories behind one pointer ----
 #
-# Every write to a copy-on-write table goes through `_commit_version`:
-# write the frame to a staging directory INSIDE the table (same
-# filesystem, so the moves below are renames), move each written leaf
-# into a fresh version slot (`v-<n>/`, or `<p>=<value>/v-<n>/` when
-# partitioned — the layout Spark's partition discovery reads with
-# basePath=<table>), then replace `_current.json` with one os.replace.
-# The pointer names the live leaf directories, the previous commit's
-# leaves, the committed schema, the layout spec and the rename map;
-# committed directories are never modified (Iceberg's snapshot commit,
+# Every copy-on-write write goes through `_commit_version`, under the
+# table's writer lock. Leaves live in `v-<n>/`, or `<p>=<value>/v-<n>/`
+# when partitioned (the layout Spark discovers with basePath=<table>),
+# and are never modified once committed (Iceberg's snapshot commit,
 # reference :133-135). Crash contract: the pointer names complete
-# versions. Whatever it does not name — a crashed attempt's staging or
-# moved leaves — is garbage that the next commit's expiry removes. The
-# expiry keeps exactly the current and the previous commit, so a reader
+# versions; whatever it does not name is garbage for the next commit's
+# expiry, which keeps the current and the previous commit so a reader
 # planned one commit earlier can still finish (reference :405-423
 # expire_snapshots, with a fixed retention).
 
 POINTER = "_current.json"
 _STAGING = "_staging-"
 _FLAT = {"partition_by": None, "bucket_by": None}
-_PATH_LOCKS: dict[str, threading.Lock] = {}
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
-def _path_lock(path: str) -> threading.Lock:
-    return _PATH_LOCKS.setdefault(os.path.abspath(path), threading.Lock())
+class _TableLock:
+    """A table's writer lock, held from reading the pointer to
+    replacing it: a thread lock for this process's writers, then an
+    flock on the table directory for other processes' (the admin CLI's
+    compact beside a running pipeline). Without it two writers that
+    read the same pointer claim the same version slot, each expires the
+    other's staging, and the later pointer replace drops the earlier
+    commit."""
+
+    def __init__(self, path: str) -> None:
+        self.path, self._thread, self._fd = path, threading.Lock(), -1
+
+    def __enter__(self) -> None:
+        self._thread.acquire()
+        try:
+            os.makedirs(self.path, exist_ok=True)
+            self._fd = os.open(self.path, os.O_RDONLY)
+            fcntl.flock(self._fd, fcntl.LOCK_EX)
+        except BaseException:
+            self.__exit__()
+            raise
+
+    def __exit__(self, *exc) -> None:
+        if self._fd >= 0:
+            os.close(self._fd)  # releases the flock
+        self._fd = -1
+        self._thread.release()
+
+
+_PATH_LOCKS: dict[str, _TableLock] = {}
+
+
+def _path_lock(path: str) -> _TableLock:
+    path = os.path.abspath(path)
+    return _PATH_LOCKS.setdefault(path, _TableLock(path))
 
 
 def read_commit(path: str) -> dict | None:
@@ -374,6 +407,13 @@ def read_commit(path: str) -> dict | None:
             return json.load(f)
     except (FileNotFoundError, NotADirectoryError):
         return None
+
+
+def _head(path: str) -> dict:
+    commit = read_commit(path)
+    if commit is None:
+        raise FileNotFoundError(f"no table at {path}")
+    return commit
 
 
 def live_dirs(path: str) -> list[str] | None:
@@ -483,10 +523,21 @@ def _move_leaves(
 
 
 def _replace_pointer(path: str, commit: dict) -> None:
+    """Publish ``commit``. The pointer is the only record of the live
+    files, schema and rename map, so it is flushed to disk before the
+    replace (a power loss must not leave it empty) and the directory
+    after it (so the replace itself is durable)."""
     tmp = os.path.join(path, f"{_STAGING}{uuid.uuid4().hex}.json")
     with open(tmp, "w") as f:
         json.dump(commit, f)
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp, os.path.join(path, POINTER))
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def _expire(path: str, commit: dict) -> None:
@@ -542,9 +593,6 @@ def _commit_version(
                 w = w.option(k, v)
             w.parquet(staging)
             if skip_empty and not _has_data_files(staging):
-                shutil.rmtree(staging, ignore_errors=True)
-                if cur is None and not os.listdir(path):
-                    os.rmdir(path)
                 return
             live += _move_leaves(path, staging, version, part)
         finally:
@@ -583,9 +631,7 @@ def rewrite_live(
     version with the same layout and rename map (physical names are
     kept) — how maintenance compaction rewrites a table."""
     with _path_lock(path):
-        commit = read_commit(path)
-        if commit is None:
-            raise ValueError(f"no table at {path}")
+        commit = _head(path)
         layout = {k: commit[k] for k in ("partition_by", "bucket_by")}
         _commit_version(
             path, transform(_read_commit(spark, path, commit)), layout
@@ -672,14 +718,9 @@ class MergeTable:
         # defeats downstream parallelism.
         self.compression = compression
         self.max_records_per_file = max_records_per_file
-        # in-process writer serialization: two concurrent merges on one
-        # path would both read the same base commit and the later
-        # pointer replace would silently drop the earlier batch (lost
-        # update). The CDC engine already serializes per table; this
-        # lock covers direct users sharing a session
-        # (streaming/runner.start_streams threads). Readers never need
-        # it. CROSS-process writers still need an external lock or the
-        # Iceberg backend's optimistic commit.
+        # writers of one path, across threads and processes (see
+        # _TableLock); readers never need it. Object stores have no
+        # flock: there the Iceberg backend's optimistic commit does it.
         self._lock = _path_lock(path)
 
     def exists(self) -> bool:
@@ -692,12 +733,6 @@ class MergeTable:
         is committed at ``path``."""
         commit = read_commit(path)
         return _LAYOUT_UNKNOWN if commit is None else commit["bucket_by"]
-
-    def _head(self) -> dict:
-        commit = read_commit(self.path)
-        if commit is None:
-            raise FileNotFoundError(f"no table at {self.path}")
-        return commit
 
     def _commit(
         self,
@@ -732,12 +767,8 @@ class MergeTable:
 
     def rename_column(self, old: str, new: str) -> None:
         with self._lock:
-            commit = read_commit(self.path)
-            cols = (
-                self._hide_bucket(self._read_raw(commit)).columns
-                if commit
-                else []
-            )
+            commit = _head(self.path)
+            cols = self._hide_bucket(self._read_raw(commit)).columns
             if old not in cols:
                 raise ValueError(f"no such column: {old}")
             if new in cols:
@@ -779,7 +810,7 @@ class MergeTable:
         # the synthetic bucket column is layout metadata, not table
         # content — hiding it here keeps schema-diff/evolution and every
         # downstream consumer unaware the table is bucketed
-        return self._hide_bucket(self._read_raw(self._head()))
+        return self._hide_bucket(self._read_raw(_head(self.path)))
 
     def _hide_bucket(self, df: DataFrame) -> DataFrame:
         return df.drop(BUCKET_COL) if self.bucket_by is not None else df
@@ -803,7 +834,7 @@ class MergeTable:
         if missing:
             raise ValueError(f"lookup keys missing key columns: {missing}")
         keys = keys.select(*self.key_columns).dropDuplicates()
-        df = self._read_raw(self._head())
+        df = self._read_raw(_head(self.path))
         pruned = self._key_partitions(keys)
         if pruned is not None:
             df = df.filter(_partition_match(*pruned))
@@ -840,9 +871,7 @@ class MergeTable:
                 f"bucket_by must be positive: {new_bucket_by}"
             )
         with self._lock:
-            commit = read_commit(self.path)
-            if commit is None:
-                raise ValueError(f"no table at {self.path}")
+            commit = _head(self.path)
             if new_bucket_by == self.bucket_by:
                 return
             df = self._hide_bucket(self._read_raw(commit))
@@ -882,7 +911,11 @@ class MergeTable:
         """Commit ``df``'s rows next to the live data (the keyless CDC
         path; Iceberg's append snapshot). The first append creates the
         table; a later one with no rows commits nothing. New columns
-        read as NULL on older rows."""
+        read as NULL on older rows. Once the live leaves reach Spark's
+        parallel-listing threshold (and twice the partition count), the
+        append folds the table and the batch into one version, as MOR
+        auto-compaction folds deltas: past it every read would run a
+        listing job."""
         if self.bucket_by is not None:
             df = self._with_bucket(df)
         with self._lock:
@@ -890,15 +923,15 @@ class MergeTable:
             if commit is None:
                 self._commit(df)
                 return
-            committed = T.StructType.fromJson(commit["schema"])
-            if not _kept_files_unreadable(committed, df.schema):
-                self._commit(df, keep=commit["live"], skip_empty=True)
-                return
-            self._commit(
-                self._read_raw(commit).unionByName(
-                    df, allowMissingColumns=True
-                )
+            live, current = commit["live"], self._read_raw(commit)
+            crowded = len(live) >= max(
+                int(self.spark.conf.get(_LISTING_THRESHOLD)),
+                2 * len({os.path.dirname(d) for d in live}),
             )
+            if crowded or _kept_files_unreadable(current.schema, df.schema):
+                df = current.unionByName(df, allowMissingColumns=True)
+                live = []
+            self._commit(df, keep=live, skip_empty=True)
 
     def merge(
         self,
@@ -931,18 +964,13 @@ class MergeTable:
                 source = self._with_bucket(source)
             commit = read_commit(self.path)
             if commit is None:
-                # NULL op is "not a delete" (same rule as merge_frames)
-                # — a bare != would NULL-drop malformed events.
-                # An all-deletes first batch commits nothing: deletes
-                # into a non-existent table are a no-op (found by the
-                # backend-equivalence property test). WRITE-FIRST, then
-                # drop the staging if empty — not a count() pre-pass,
-                # and NOT isEmpty(): the CDC engine rides its quarantine
-                # metrics on the FIRST action over the observed batch
-                # plan, and a limit-1 probe short-circuits, counting
-                # only the rows the early exit happened to scan (found
-                # by the malformed-payload engine property). The write
-                # scans every row, completing the Observation.
+                # NULL op is "not a delete" (same rule as merge_frames).
+                # An all-deletes first batch commits nothing (found by
+                # the backend-equivalence property). WRITE-FIRST, then
+                # drop the staging if empty — not count(), and NOT
+                # isEmpty(): the CDC engine's quarantine metrics ride
+                # the FIRST action over the observed batch, and a
+                # limit-1 probe would count only the rows it scanned.
                 self._commit(
                     source.filter(
                         F.coalesce(F.col(op_col) != DELETE_OP, F.lit(True))
@@ -1007,13 +1035,19 @@ class MergeTable:
                 "left_semi",
             ).select(p)
             all_parts = source.select(p).union(moved_parts).distinct()
-        parts = [r[p] for r in all_parts.collect()]
-        if not parts:  # empty batch → nothing to rewrite
+        rows = all_parts.select(p, F.col(p).cast("string")).collect()
+        if not rows:  # empty batch → nothing to rewrite
             return
         # the affected partitions' live directories leave the live set;
-        # names are rebuilt with the writer's escaping (_partition_dir)
-        # so the comparison with the committed leaf names is exact
-        touched = {_partition_dir(p, v) for v in parts}
+        # names are rebuilt from the values' Spark string form with the
+        # writer's escaping (_partition_dir), so the comparison with the
+        # committed leaf names is exact for every partition type
+        touched = {_partition_dir(p, s) for _, s in rows}
+        # "" is written to the NULL partition and reads back as NULL:
+        # when that directory is touched, its NULL rows are affected
+        parts = [v for v, _ in rows]
+        if f"{p}={_NULL_PART_DIR}" in touched:
+            parts.append(None)
         merged = merge_frames(
             target.filter(_partition_match(p, parts)),
             source,
@@ -1067,7 +1101,7 @@ class MergeTableMOR:
         self.path = path
         self.key_columns = list(key_columns)
         self.ts_guard = ts_guard
-        # same in-process serialization as the COW backend (shared
+        # same writer serialization as the COW backend (shared
         # registry): without it two concurrent merges read the same
         # delta count and the later overwrite of delta-{N} silently
         # clobbers the earlier batch
@@ -1088,10 +1122,7 @@ class MergeTableMOR:
         return read_commit(self.base_path) is not None
 
     def _base(self) -> DataFrame:
-        commit = read_commit(self.base_path)
-        if commit is None:
-            raise FileNotFoundError(f"no table at {self.path}")
-        return _read_commit(self.spark, self.base_path, commit)
+        return _read_commit(self.spark, self.base_path, _head(self.base_path))
 
     def _commit_base(self, df: DataFrame, skip_empty: bool = False) -> None:
         _commit_version(
@@ -1099,8 +1130,6 @@ class MergeTableMOR:
         )
 
     def _delta_paths(self) -> list[str]:
-        import glob
-
         # only COMMITTED deltas count: a crash mid-write can leave a
         # partial dir (no _SUCCESS), and counting it would (a) shift
         # the next merge's sequence past a hole and (b) feed read()
@@ -1127,11 +1156,8 @@ class MergeTableMOR:
                 inserts = source.filter(
                     F.coalesce(F.col(op_col) != DELETE_OP, F.lit(True))
                 )
-                # same rule as the COW path: an all-deletes first batch
-                # commits no base. Write-first then drop if empty (not
-                # count(), not isEmpty()) for the same observed-metrics
-                # reason documented in MergeTable.merge — one batch
-                # scan instead of two.
+                # an all-deletes first batch commits no base; written
+                # first for the reason given in MergeTable.merge
                 self._commit_base(inserts, skip_empty=True)
                 return
             # stage-then-rename: writing delta-N directly is not
@@ -1140,8 +1166,6 @@ class MergeTableMOR:
             # read() or shift a blind recount. The staged write can
             # crash harmlessly (invisible to _delta_paths), and the
             # rename publishes a fully-written delta or nothing.
-            import glob
-
             for leftover in glob.glob(
                 os.path.join(self.delta_dir, ".staging-*")
             ):

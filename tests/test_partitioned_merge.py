@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import glob
 import os
+from datetime import datetime
 
 import pytest
 
@@ -245,3 +246,36 @@ def test_append_new_column_reads_null_on_old_rows(spark, tmp_path):
     assert {r["id"]: r["n"] for r in df.collect()} == {
         1: 5.0, 2: 6.0, 3: None, 4: 1.5
     }
+
+
+@pytest.mark.parametrize(
+    "ptype, a, b",
+    [
+        ("boolean", True, False),
+        ("double", 1e20, 0.5),
+        ("timestamp", datetime(2024, 1, 1, 0, 0, 0, 500000),
+         datetime(2024, 3, 1)),
+        ("string", "", "x"),
+    ],
+)
+def test_merge_on_non_string_partition_replaces_its_leaf(
+    spark, tmp_path, ptype, a, b
+):
+    """Regression: the touched partitions' leaf names were rebuilt with
+    Python's str() (``True``, ``1e+20``, ``.500000``) instead of Spark's
+    rendering (``true``, ``1.0E20``, ``.5``), so an update kept the old
+    leaf live next to the new one and every updated row read twice.
+    An empty string is written to the NULL partition and reads back as
+    NULL; updating it must replace that leaf too."""
+    schema = f"id long, val string, p {ptype}, __ts_ms long, __op string"
+    t = MergeTable(spark, str(tmp_path / "t"), ["id"], partition_by="p")
+    t.merge(spark.createDataFrame(
+        [(1, "a", a, 100, "c"), (2, "b", b, 100, "c")], schema
+    ))
+    t.merge(spark.createDataFrame([(1, "A", a, 200, "u")], schema))
+    assert sorted((r["id"], r["val"]) for r in t.read().collect()) == [
+        (1, "A"), (2, "b")
+    ]
+    t.merge(spark.createDataFrame([(2, "b", b, 300, "d")], schema))
+    assert [(r["id"], r["val"]) for r in t.read().collect()] == [(1, "A")]
+    assert len(live_dirs(t.path)) == 1

@@ -8,6 +8,8 @@ from __future__ import annotations
 import glob
 import os
 import random
+import subprocess
+import sys
 import threading
 
 import pytest
@@ -195,3 +197,63 @@ def test_read_and_lookup_build_no_jobs(spark, tmp_path):
         )
         assert lookup_jobs == bucket_jobs, name
     assert BUCKET_COL not in tables["buck"].read().columns
+
+
+_HOLD_LOCK = """
+import sys
+from data_engineering_spark.operators.merge import _path_lock
+with _path_lock(sys.argv[1]):
+    print("held", flush=True)
+    sys.stdin.readline()
+"""
+
+
+def test_writer_waits_for_another_process(spark, tmp_path):
+    """The writer lock is exclusive across processes (a compact from
+    the admin CLI beside a running pipeline): while another process
+    holds it, an append here waits, and it lands once released."""
+    path = str(tmp_path / "t")
+    t = MergeTable(spark, path, [])
+    t.append(spark.createDataFrame([(1,)], "id long"))
+    batch = spark.createDataFrame([(2,)], "id long")
+    holder = subprocess.Popen(
+        [sys.executable, "-c", _HOLD_LOCK, path],
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    writer = threading.Thread(target=t.append, args=(batch,))
+    try:
+        assert holder.stdout.readline().strip() == "held"
+        writer.start()
+        writer.join(2.0)
+        assert writer.is_alive(), "append ran under another process's lock"
+        assert read_commit(path)["version"] == 1
+    finally:
+        holder.communicate("\n", timeout=60)
+    writer.join(120)
+    assert not writer.is_alive()
+    assert sorted(r["id"] for r in t.read().collect()) == [1, 2]
+
+
+def test_appends_keep_live_leaves_under_listing_threshold(spark, tmp_path):
+    """Each append adds a live leaf; once the live set reaches Spark's
+    parallel-listing threshold the next append folds the table into
+    one version, so a read never lists with a Spark job and no row is
+    lost."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        t = MergeTable(spark, str(tmp_path / "t"), [])
+        counts = []
+        for i in range(10):
+            t.append(spark.createDataFrame([(i,)], "id long"))
+            counts.append(len(read_commit(t.path)["live"]))
+            if counts[-1] == 4:
+                assert _jobs(spark, f"listing_{i}", t.read) == 0
+        assert counts == [1, 2, 3, 4, 1, 2, 3, 4, 1, 2]
+        assert sorted(r["id"] for r in t.read().collect()) == list(range(10))
+    finally:
+        spark.conf.set(key, old)
